@@ -25,7 +25,13 @@ Arrow-batched pandas UDFs where built-ins genuinely cannot express
 the semantics.
 """
 
-from ai_data_pipeline_spark.session import get_spark
+from ai_data_pipeline_spark import _pyworker
+
+# Python workers import this package when they unpickle its UDFs; this
+# makes each later task on that worker skip re-reading pyspark.zip.
+_pyworker.install()
+
+from ai_data_pipeline_spark.session import get_spark  # noqa: E402
 from ai_data_pipeline_spark.catalog import TABLE_NAMES, load_table, load_tables, register_views
 
 __all__ = [

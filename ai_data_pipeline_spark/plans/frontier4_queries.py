@@ -2398,16 +2398,16 @@ def q310_incremental_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         touched = sorted(
             int(r["shard"]) for r in delta.select("shard").distinct().collect()
         )
-        refreshed = manifest_of(
-            spark.read.option("basePath", path).parquet(
-                *[f"{path}/shard={s}" for s in touched]
-            )
-        ).withColumn("updated", F.lit(1).cast("long"))
-        merged = (
-            m1.filter(~F.col("shard").isin([int(t) for t in touched]))
-            .withColumn("updated", F.lit(0).cast("long"))
-            .unionByName(refreshed)
-        )
+        merged = m1.filter(
+            ~F.col("shard").isin([int(t) for t in touched])
+        ).withColumn("updated", F.lit(0).cast("long"))
+        if touched:  # an empty delta touches no shard: nothing to re-read
+            refreshed = manifest_of(
+                spark.read.option("basePath", path).parquet(
+                    *[f"{path}/shard={s}" for s in touched]
+                )
+            ).withColumn("updated", F.lit(1).cast("long"))
+            merged = merged.unionByName(refreshed)
         out = merged.orderBy("shard").collect()  # |shards| rows
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

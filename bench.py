@@ -326,6 +326,7 @@ class TaskTimeProbe:
     def __init__(self, spark) -> None:
         self.base: str | None = None
         self._watermark = -1
+        self._counted: set[int] = set()  # harvested job ids above the watermark
         try:
             ui = spark.sparkContext.uiWebUrl
             app = spark.sparkContext.applicationId
@@ -337,24 +338,44 @@ class TaskTimeProbe:
             self.base = None
 
     def harvest(self) -> float | None:
-        """Task-seconds of all jobs newer than the watermark; advances it."""
+        """Task-seconds of the finished jobs not harvested before.
+
+        The watermark stops below the oldest job still running, so its
+        stages are counted once it finishes; finished jobs above the
+        watermark are remembered so they are not counted twice.  A
+        retried stage counts its latest attempt only.
+        """
         if not self.base:
             return None
         try:
             jobs = _rest_json(self.base + "/jobs")
-            new = [j for j in jobs if j.get("jobId", -1) > self._watermark]
-            self._watermark = max(
-                (j.get("jobId", -1) for j in jobs), default=self._watermark
-            )
+            new = [
+                j
+                for j in jobs
+                if j.get("jobId", -1) > self._watermark
+                and j.get("jobId") not in self._counted
+            ]
+            running = [j["jobId"] for j in new if j.get("status") == "RUNNING"]
+            done = [j for j in new if j.get("status") != "RUNNING"]
+            if running:
+                self._watermark = min(running) - 1
+            else:
+                self._watermark = max(
+                    (j.get("jobId", -1) for j in jobs), default=self._watermark
+                )
+            self._counted = {
+                i for i in self._counted | {j["jobId"] for j in done}
+                if i > self._watermark
+            }
             sids: set[int] = set()
-            for j in new:
+            for j in done:
                 sids.update(j.get("stageIds", []))
             stages = _rest_json(self.base + "/stages?status=complete")
-            ms = sum(
-                s.get("executorRunTime", 0)
-                for s in stages
-                if s.get("stageId") in sids
-            )
+            latest: dict[int, dict] = {}
+            for s in sorted(stages, key=lambda s: s.get("attemptId", 0)):
+                if s.get("stageId") in sids:
+                    latest[s["stageId"]] = s
+            ms = sum(s.get("executorRunTime", 0) for s in latest.values())
             return ms / 1000.0
         except Exception:
             return None

@@ -266,3 +266,20 @@ def test_q314_emptied_partitions_dropped(spark, tmp_path):
     e = out["release_export"]
     # shards 0 (mixed) and 3 (deleted-only): 3 survivors remain.
     assert (e["n_rows"], e["n_partitions"], e["n_rewritten"]) == (3, 2, 2)
+
+
+def test_q310_empty_delta_touches_no_shard(spark, monkeypatch):
+    """An empty delta touches no shard: the refresh must skip the
+    shard read (a zero-path parquet read throws) and return manifest
+    v1 unchanged. A negative range width flags no document as delta
+    (``doc_id > max + 64`` never holds)."""
+    monkeypatch.setattr(f4, "_Q310_WIDTH", -64)
+    rows = f4.q310_incremental_manifest(spark, SF_SMOKE).collect()
+    n_release = (
+        spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+        .filter(F.col("lang") == f4._Q310_LANG)
+        .count()
+    )
+    assert rows and n_release
+    assert sum(r["n_rows"] for r in rows) == n_release
+    assert {r["updated"] for r in rows} == {0}
