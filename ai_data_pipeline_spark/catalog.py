@@ -64,6 +64,29 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
     return df.repartition(n)
 
 
+def local_frame(spark: SparkSession, cols: list[tuple[str, str]], rows: list[tuple]) -> DataFrame:
+    """A small driver-built result as a parameterized ``VALUES``
+    relation: ``cols`` is [(name, SQL type)], each row one tuple of
+    Python values (None → NULL; lists → arrays).
+
+    The plan is a LocalRelation, so collecting it runs no Spark job
+    under any session conf. ``createDataFrame(list)`` (and non-Arrow
+    ``createDataFrame(pandas)``) instead launch a reserialize job
+    whose Python workers start cold (~1.1 CPU-s measured). Doubles
+    bind as double literals, bit-exact.
+    """
+    if not rows:
+        sel = ", ".join(f"CAST(NULL AS {t}) AS `{n}`" for n, t in cols)
+        return spark.sql(f"SELECT {sel} WHERE false")
+    sel = ", ".join(f"CAST(c{j} AS {t}) AS `{n}`" for j, (n, t) in enumerate(cols))
+    names = ", ".join(f"c{j}" for j in range(len(cols)))
+    marks = ", ".join(
+        "(" + ", ".join(f":p{i}_{j}" for j in range(len(cols))) + ")" for i in range(len(rows))
+    )
+    args = {f"p{i}_{j}": v for i, r in enumerate(rows) for j, v in enumerate(r)}
+    return spark.sql(f"SELECT {sel} FROM VALUES {marks} AS t({names})", args=args)
+
+
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
 

@@ -9,12 +9,10 @@ with distance exactly at the threshold accepted.
 Spark-first design:
 - the corpus stays distributed; the (small) query side broadcasts —
   the reference's whole-corpus-in-RAM constraint disappears;
-- exact kNN = broadcast nested-loop join + per-query top-k window;
-  at 100 TB the scan is embarrassingly parallel and the window
-  shuffles only (n_queries × k) candidate rows after partial
-  aggregation... more precisely we pre-reduce with a per-partition
-  top-k (the window after a `row_number` filter) so the shuffle
-  carries candidates, not the corpus;
+- exact L2 kNN (vectorized.knn_l2_np) scans each corpus partition
+  once, keeps a per-partition top-k, and merges the ≤ queries ×
+  partitions × k candidates on the driver: no shuffle, no window,
+  and the answer rides along as a payload instead of a join-back;
 - approximate path = IVF with deterministic centroids: assign each
   corpus vector to its nearest centroid once (a narrow column),
   partition by centroid, probe only ``nprobe`` cells per query.
@@ -28,39 +26,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ai_data_pipeline_spark.catalog import local_frame
 from ai_data_pipeline_spark.functions.vector import array_lit, cosine, dot, norm, squared_l2
 
 
 def queries_df(spark: SparkSession, vectors: list[list[float]], id_start: int = 0) -> DataFrame:
-    """Small query-side DataFrame [qid, qvec] from literal vectors."""
+    """Small query-side DataFrame [qid, qvec] from literal vectors (a
+    local relation: collecting it runs no job)."""
     rows = [(i + id_start, [float(x) for x in v]) for i, v in enumerate(vectors)]
-    return spark.createDataFrame(rows, "qid BIGINT, qvec ARRAY<DOUBLE>")
-
-
-def knn_l2(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 1,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    query_id: str = "qid",
-    query_vec: str = "qvec",
-    dim: int | None = None,
-) -> DataFrame:
-    """Exact k-nearest-neighbors by squared L2 (R17 generalized to k).
-
-    Output: [qid, <corpus_id>, dist, rk]. Ties broken by corpus id.
-    """
-    n = corpus.sparkSession.sparkContext.defaultParallelism
-    joined = corpus.repartition(n).crossJoin(F.broadcast(queries)).withColumn(
-        "dist", squared_l2(corpus_vec, query_vec, dim)
-    )
-    w = Window.partitionBy(query_id).orderBy(F.asc("dist"), F.asc(corpus_id))
-    return (
-        joined.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
-        .select(query_id, corpus_id, "dist", "rk")
-    )
+    return local_frame(spark, [("qid", "BIGINT"), ("qvec", "ARRAY<DOUBLE>")], rows)
 
 
 def knn_l2_with_threshold(
@@ -77,28 +51,24 @@ def knn_l2_with_threshold(
     squared distance rejects (distance == threshold is ACCEPTED,
     preserving `rag_chatbot/main.py:42`).
 
-    Output: [qid, <corpus_id>, dist, accepted, answer]; the answer is
-    the positional-lookup join of the reference (R19) folded in.
-
-    Distances run through the numpy kernel (operators/vectorized.py —
-    bit-exact with the expression path; parity-tested) because d-wide
-    per-pair expressions fall out of codegen at realistic d.
+    Output: [qid, <corpus_id>, dist, accepted, answer] — a local
+    relation. The answer (the reference's positional lookup, R19)
+    rides through the numpy kernel as its payload; a rejected row
+    gets the sentinel, an accepted NULL answer stays NULL. The corpus
+    is scanned as it is partitioned (knn_l2_np): spread the index
+    once where it is built, not per query.
     """
     from ai_data_pipeline_spark.operators.vectorized import knn_l2_np
 
-    nn = knn_l2_np(corpus, queries, k=1, corpus_id=corpus_id, corpus_vec=corpus_vec)
-    answers = corpus.select(corpus_id, F.col(answer_col).cast("string").alias("_ans"))
-    return (
-        nn.join(answers, corpus_id)
-        .select(
-            "qid",
-            corpus_id,
-            "dist",
-            (F.col("dist") <= F.lit(threshold)).alias("accepted"),
-            F.when(F.col("dist") > F.lit(threshold), F.lit(sentinel))
-            .otherwise(F.col("_ans"))
-            .alias("answer"),
-        )
+    nn = knn_l2_np(corpus, queries, 1, corpus_id, corpus_vec, payload=answer_col)
+    return nn.select(
+        "qid",
+        corpus_id,
+        "dist",
+        (F.col("dist") <= F.lit(threshold)).alias("accepted"),
+        F.when(F.col("dist") > F.lit(threshold), F.lit(sentinel))
+        .otherwise(F.col(answer_col))
+        .alias("answer"),
     )
 
 

@@ -25,9 +25,10 @@ FMA summation) — never use them here.
 
 Scale design (100 TB): the corpus never collects; queries/centroids
 broadcast inside task closures (KBs); per-partition top-k reduces
-each task's output to q×k rows before the single tiny shuffle; the
-all-pairs kernel blocks the corpus and parallelizes over block pairs
-with per-block-pair top-k pushdown.
+each task's output to q×k rows, which the exact-L2 kNN merges on the
+driver (no shuffle) and the cosine/ANN kernels rank with one window;
+the all-pairs kernel blocks the corpus and parallelizes over block
+pairs with per-block-pair top-k pushdown.
 """
 
 from __future__ import annotations
@@ -38,6 +39,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ai_data_pipeline_spark.catalog import local_frame
 
 # ---------------------------------------------------------------------------
 # numpy primitives (left-to-right, bit-exact with the SQL chains)
@@ -159,44 +162,54 @@ def knn_l2_np(
     k: int = 1,
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
+    payload: str | None = None,
 ) -> DataFrame:
-    """Exact kNN by squared L2, ties by corpus id. Same shape as
-    cosine_topk_np with (dist ASC, id ASC) ordering."""
+    """Exact kNN by squared L2, ties by corpus id:
+    [qid, <corpus_id>, dist, rk] plus ``payload`` (cast to string).
+
+    One scan of the corpus AS IT IS PARTITIONED — set the index's
+    parallelism once where it is built, never per call. Each task
+    keeps its per-query top-k; the driver collects those ≤ queries ×
+    partitions × k candidates (a computed bound) and merges them with
+    the same (dist, id) lexsort. The result is a local relation: one
+    Spark job per call, none to collect it, no shuffle.
+    """
     qrows = queries.select("qid", "qvec").collect()
     qids = [int(r["qid"]) for r in qrows]
     qmat = np.array([r["qvec"] for r in qrows], dtype=np.float64)
-
-    spark = corpus.sparkSession
-    n = spark.sparkContext.defaultParallelism
+    pay = F.col(payload) if payload else F.lit(None)
     src = corpus.select(
-        F.col(corpus_id).cast("long").alias("_id"), F.col(corpus_vec).alias("_vec")
-    ).repartition(n)
+        F.col(corpus_id).cast("long").alias("_id"),
+        F.col(corpus_vec).alias("_vec"),
+        pay.cast("string").alias("_pay"),
+    )
 
     def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        best: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+        best: dict[int, tuple[np.ndarray, ...]] = {}
         for pdf in batches:
             if not len(pdf):
                 continue
             mat = _mat(pdf["_vec"])
-            ids = pdf["_id"].to_numpy()
+            ids, pays = pdf["_id"].to_numpy(), pdf["_pay"].to_numpy(dtype=object)
             for qi, qid in enumerate(qids):
-                dists = sqdists_ltr(mat, qmat[qi])
-                bids = ids
+                cand = (sqdists_ltr(mat, qmat[qi]), ids, pays)
                 if qid in best:
-                    dists = np.concatenate([best[qid][0], dists])
-                    bids = np.concatenate([best[qid][1], bids])
-                order = np.lexsort((bids, dists))[:k]
-                best[qid] = (dists[order], bids[order])
-        for qid, (dists, bids) in best.items():
-            yield pd.DataFrame({"qid": qid, "_id": bids, "dist": dists})
+                    cand = tuple(np.concatenate(p) for p in zip(best[qid], cand))
+                order = np.lexsort((cand[1], cand[0]))[:k]
+                best[qid] = tuple(a[order] for a in cand)
+        for qid, (dists, bids, bpays) in best.items():
+            yield pd.DataFrame({"qid": qid, "_id": bids, "dist": dists, "_pay": bpays})
 
-    cand = src.mapInPandas(kern, "qid long, _id long, dist double")
-    w = Window.partitionBy("qid").orderBy(F.asc("dist"), F.asc("_id"))
-    return (
-        cand.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
-        .select("qid", F.col("_id").alias(corpus_id), "dist", "rk")
-    )
+    rows = src.mapInPandas(kern, "qid long, _id long, dist double, _pay string").collect()
+    qs, ids, dists = (np.array([r[i] for r in rows]) for i in range(3))
+    merged, rk = [], 0
+    for i in np.lexsort((ids, dists, qs)):
+        rk = rk + 1 if merged and merged[-1][0] == qs[i] else 1
+        if rk <= k:
+            merged.append((int(qs[i]), int(ids[i]), float(dists[i]), rk, rows[i][3]))
+    cols = [("qid", "BIGINT"), (corpus_id, "BIGINT"), ("dist", "DOUBLE"), ("rk", "BIGINT")]
+    out = local_frame(corpus.sparkSession, cols + [("_pay", "STRING")], merged)
+    return out.withColumnRenamed("_pay", payload) if payload else out.drop("_pay")
 
 
 # ---------------------------------------------------------------------------

@@ -9,9 +9,7 @@ record (append mode, `app/main.py:99`). Engine upgrades:
   per document) and ``mode="overwrite"`` with dynamic partition
   overwrite replaces exactly the partitions being rewritten →
   idempotent re-runs (the reference's dup-on-rerun is a regression
-  test);
-- streaming: ``stream_jsonl`` writes with a checkpoint → exactly-once
-  per micro-batch, the streaming fix for flush-per-record.
+  test).
 """
 
 from __future__ import annotations
@@ -45,16 +43,6 @@ def with_source_stem(df: DataFrame, source_col: str = "source_file") -> DataFram
     return df.withColumn(
         "source_stem", F.regexp_replace(F.element_at(F.split(F.col(source_col), "/"), -1), r"\.[^.]+$", "")
     )
-
-
-def stream_jsonl(df: DataFrame, path: str, checkpoint: str, partition_col: str | None = None):
-    """Streaming JSONL sink with checkpointed exactly-once commit."""
-    w = df.writeStream.format("json").option("path", path).option(
-        "checkpointLocation", checkpoint
-    ).outputMode("append")
-    if partition_col:
-        w = w.partitionBy(partition_col)
-    return w
 
 
 def foreach_batch_upsert(

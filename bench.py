@@ -308,6 +308,11 @@ def _rest_json(url: str):
         return json.loads(r.read().decode())
 
 
+# UI job retention; a harvest that sees this many new jobs may have lost
+# some to eviction, so TaskTimeProbe reports None rather than undercount
+RETAINED_JOBS = 400
+
+
 class TaskTimeProbe:
     """Per-query executor task-time via the local status REST API.
 
@@ -343,7 +348,9 @@ class TaskTimeProbe:
         The watermark stops below the oldest job still running, so its
         stages are counted once it finishes; finished jobs above the
         watermark are remembered so they are not counted twice.  A
-        retried stage counts its latest attempt only.
+        retried stage counts its latest attempt only.  None when
+        ``RETAINED_JOBS`` or more jobs are new: older ones may have been
+        evicted from the UI before they were counted.
         """
         if not self.base:
             return None
@@ -367,6 +374,8 @@ class TaskTimeProbe:
                 i for i in self._counted | {j["jobId"] for j in done}
                 if i > self._watermark
             }
+            if len(new) >= RETAINED_JOBS:
+                return None
             sids: set[int] = set()
             for j in done:
                 sids.update(j.get("stageIds", []))
@@ -388,7 +397,7 @@ def main() -> int:
     spark = get_spark(
         "bench",
         extra_conf={
-            "spark.ui.retainedJobs": "400",
+            "spark.ui.retainedJobs": str(RETAINED_JOBS),
             "spark.ui.retainedStages": "1200",
         },
     )

@@ -21,3 +21,20 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+def knn_l2_twin(corpus: list[tuple], queries: list[tuple], k: int) -> list[tuple]:
+    """Brute-force exact kNN: [(qid, vec_id, dist, rk)] ranked by
+    (dist, vec_id). ``corpus`` is [(vec_id, vec)], ``queries`` is
+    [(qid, qvec)]. A plain-Python left-to-right loop (the same IEEE
+    op order as the numpy kernel, written independently of it)."""
+    out = []
+    for qid, q in queries:
+        scored = []
+        for vid, v in corpus:
+            acc = 0.0
+            for a, b in zip(v, q):
+                acc = acc + (float(a) - float(b)) * (float(a) - float(b))
+            scored.append((acc, vid))
+        out += [(qid, vid, d, rk) for rk, (d, vid) in enumerate(sorted(scored)[:k], 1)]
+    return out

@@ -1,6 +1,7 @@
 """bench.TaskTimeProbe.harvest against canned status-API replies: each
-finished job counts once, a running job waits for its finish, and a
-retried stage counts its latest attempt only."""
+finished job counts once, a running job waits for its finish, a
+retried stage counts its latest attempt only, and a harvest that may
+have lost jobs to UI eviction reports None."""
 
 from __future__ import annotations
 
@@ -44,3 +45,18 @@ def test_harvest_latest_attempt_and_running_jobs(monkeypatch):
     assert probe.harvest() == 4.5  # jobs 1 and 3; job 2 is not counted again
     assert probe._watermark == 3 and probe._counted == set()
     assert probe.harvest() == 0.0
+
+
+def test_harvest_none_when_jobs_may_be_evicted(monkeypatch):
+    n = bench.RETAINED_JOBS
+    replies = {
+        "jobs": [{"jobId": i, "status": "SUCCEEDED", "stageIds": [i]} for i in range(n)],
+        "stages": [{"stageId": i, "attemptId": 0, "executorRunTime": 1000} for i in range(n)],
+    }
+    probe = _probe(monkeypatch, replies)
+    assert probe.harvest() is None  # a full retention window: older jobs may be gone
+    assert probe._watermark == n - 1
+
+    replies["jobs"] = replies["jobs"][1:] + [{"jobId": n, "status": "SUCCEEDED", "stageIds": [n]}]
+    replies["stages"].append({"stageId": n, "attemptId": 0, "executorRunTime": 250})
+    assert probe.harvest() == 0.25  # one new job: nothing can have been lost

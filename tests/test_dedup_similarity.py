@@ -8,6 +8,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.operators import dedup, similarity
+from ai_data_pipeline_spark.operators.vectorized import knn_l2_np
+from tests.conftest import knn_l2_twin
 
 
 def _docs(spark):
@@ -146,8 +148,11 @@ def _emb(spark):
 
 
 def test_knn_l2_basic(spark):
-    q = similarity.queries_df(spark, [[1.0, 0.1, 0.0, 0.0]])
-    out = similarity.knn_l2(_emb(spark), q, k=2).collect()
+    qvec = [1.0, 0.1, 0.0, 0.0]
+    out = knn_l2_np(_emb(spark), similarity.queries_df(spark, [qvec]), k=2).collect()
+    got = [(r.qid, r.vec_id, r.dist, r.rk) for r in out]
+    corpus = [(r.vec_id, r.embedding) for r in _emb(spark).collect()]
+    assert got == knn_l2_twin(corpus, [(0, qvec)], 2)
     assert [r.vec_id for r in out] == [1, 4]
 
 

@@ -24,6 +24,7 @@ from ai_data_pipeline_spark.plans.constants import (
     Q27_QUERY_VECS,
     Q28_CENTROIDS,
 )
+from tests.conftest import knn_l2_twin
 
 
 @pytest.fixture(scope="module")
@@ -45,9 +46,9 @@ def test_cosine_topk_parity(spark, emb):
 
 def test_knn_l2_parity(spark, emb):
     q = similarity.queries_df(spark, Q27_QUERY_VECS)
-    expr = similarity.knn_l2(emb, q, k=4, dim=EMBED_DIM).orderBy("qid", "rk")
+    want = knn_l2_twin(_rows(emb, "vec_id", "embedding"), list(enumerate(Q27_QUERY_VECS)), 4)
     fast = knn_l2_np(emb, q, k=4).orderBy("qid", "rk")
-    assert _rows(expr, "qid", "vec_id", "dist", "rk") == _rows(fast, "qid", "vec_id", "dist", "rk")
+    assert _rows(fast, "qid", "vec_id", "dist", "rk") == want  # exact ==
 
 
 def test_cosine_pairs_parity(spark, emb):
