@@ -9,6 +9,7 @@ partitioned/bucketed tables behind a metastore; the API shape
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -64,27 +65,50 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
     return df.repartition(n)
 
 
+def _literal(v, t: str, key: str, args: dict) -> str:
+    """SQL text for value ``v`` of declared type ``t``. Numbers are
+    inlined: a double as its shortest round-trip repr with a ``D``
+    suffix (the parser reads it with a correctly rounded
+    ``parseDouble``, so the bits come back unchanged), non-finite
+    doubles through CAST of their name, integers as digits. Anything
+    else binds as the named parameter ``key``."""
+    if v is None:
+        return "NULL"
+    if t == "DOUBLE":
+        x = float(v)
+        return f"{x!r}D" if math.isfinite(x) else f"CAST('{x}' AS DOUBLE)"
+    if t == "BIGINT":
+        return str(int(v))
+    if t == "ARRAY<DOUBLE>":
+        return f"array({', '.join(_literal(x, 'DOUBLE', '', args) for x in v)})"
+    args[key] = v
+    return f":{key}"
+
+
 def local_frame(spark: SparkSession, cols: list[tuple[str, str]], rows: list[tuple]) -> DataFrame:
-    """A small driver-built result as a parameterized ``VALUES``
-    relation: ``cols`` is [(name, SQL type)], each row one tuple of
-    Python values (None → NULL; lists → arrays).
+    """A small driver-built result as a ``VALUES`` relation: ``cols``
+    is [(name, SQL type)], each row one tuple of Python values
+    (None → NULL; lists → arrays).
 
     The plan is a LocalRelation, so collecting it runs no Spark job
     under any session conf. ``createDataFrame(list)`` (and non-Arrow
     ``createDataFrame(pandas)``) instead launch a reserialize job
-    whose Python workers start cold (~1.1 CPU-s measured). Doubles
-    bind as double literals, bit-exact.
+    whose Python workers start cold (~1.1 CPU-s measured). BIGINT,
+    DOUBLE and ARRAY<DOUBLE> values are written into the SQL text,
+    bit-exact (see _literal); other types bind as parameters, each of
+    which costs the driver a round of py4j calls.
     """
     if not rows:
         sel = ", ".join(f"CAST(NULL AS {t}) AS `{n}`" for n, t in cols)
         return spark.sql(f"SELECT {sel} WHERE false")
     sel = ", ".join(f"CAST(c{j} AS {t}) AS `{n}`" for j, (n, t) in enumerate(cols))
     names = ", ".join(f"c{j}" for j in range(len(cols)))
-    marks = ", ".join(
-        "(" + ", ".join(f":p{i}_{j}" for j in range(len(cols))) + ")" for i in range(len(rows))
+    args: dict = {}
+    values = ", ".join(
+        "(" + ", ".join(_literal(v, t, f"p{i}_{j}", args) for j, (v, (_, t)) in enumerate(zip(r, cols))) + ")"
+        for i, r in enumerate(rows)
     )
-    args = {f"p{i}_{j}": v for i, r in enumerate(rows) for j, v in enumerate(r)}
-    return spark.sql(f"SELECT {sel} FROM VALUES {marks} AS t({names})", args=args)
+    return spark.sql(f"SELECT {sel} FROM VALUES {values} AS t({names})", args=args or None)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

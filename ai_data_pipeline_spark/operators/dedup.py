@@ -579,7 +579,7 @@ def embedding_neardup_pairs(
     """All-pairs cosine similarity, optionally blocked.
 
     Blocking is the scale lever: with a block column (cluster id,
-    LSH bucket, IVF cell — see similarity.ivf_assign) the join is
+    LSH bucket, IVF cell — see vectorized.ivf_assign_np) the join is
     equi on the block and the quadratic blowup is per-block. Without
     one this is a corpus² scan — only for small/sampled corpora.
     Output: [id_a, id_b, sim].
@@ -929,10 +929,10 @@ def semantic_dedup(
     THIN operator, because each stage is already the scale-hardened
     form:
 
-    1. ``similarity.ivf_assign``-equivalent cell assignment via the
-       Arrow kernel (:func:`~ai_data_pipeline_spark.operators.
-       vectorized.ivf_assign_np`, bit-parity pinned against the
-       expression path by tests/test_vectorized.py);
+    1. nearest-centroid cell assignment via the Arrow kernel
+       (:func:`~ai_data_pipeline_spark.operators.vectorized.
+       ivf_assign_np`, pinned against a plain-Python twin by
+       tests/test_vectorized.py);
     2. within-cell exact cosine pairs via the Arrow blocked kernel
        (:func:`~ai_data_pipeline_spark.operators.vectorized.
        cosine_pairs_np` with ``block_col="cell"`` — the quadratic

@@ -24,20 +24,20 @@ bit-for-bit, not approximately. np.dot/np.sum would NOT (pairwise/
 FMA summation) — never use them here.
 
 Scale design (100 TB): the corpus never collects; queries/centroids
-broadcast inside task closures (KBs); per-partition top-k reduces
-each task's output to q×k rows, which the exact-L2 kNN merges on the
-driver (no shuffle) and the cosine/ANN kernels rank with one window;
-the all-pairs kernel blocks the corpus and parallelizes over block
-pairs with per-block-pair top-k pushdown.
+broadcast inside task closures (KBs); every per-query search (exact
+L2, cosine, IVF, LSH) is one scan whose per-partition top-k reduces
+each task's output to q×k rows, merged on the driver (_scan_topk: no
+shuffle, no window); the all-pairs kernel blocks the corpus and
+parallelizes over block pairs with per-block-pair top-k pushdown.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.catalog import local_frame
@@ -86,11 +86,108 @@ def _mat(col: pd.Series) -> np.ndarray:
     return np.stack(col.to_numpy()).astype(np.float64)
 
 
-def _topk_desc(sims: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
-    """Indices of the top-k by (sim DESC, id ASC) — the tie-break
-    every similarity query declares."""
-    order = np.lexsort((ids, -sims))
-    return order[:k]
+# ---------------------------------------------------------------------------
+# Per-query top-k: one corpus scan, merged on the driver
+# ---------------------------------------------------------------------------
+
+
+Scorer = Callable[[np.ndarray, pd.DataFrame], Iterator[tuple[np.ndarray | slice, np.ndarray]]]
+
+
+def _queries(queries: DataFrame) -> tuple[list[int], np.ndarray]:
+    """Collect the (documented-small) query side: qids and an (n, d)
+    float64 matrix, (0, 0) when there are no queries."""
+    rows = queries.select("qid", "qvec").collect()
+    qmat = np.array([r["qvec"] for r in rows], dtype=np.float64) if rows else np.zeros((0, 0))
+    return [int(r["qid"]) for r in rows], qmat
+
+
+def _scan_topk(
+    corpus: DataFrame,
+    qids: list[int],
+    k: int,
+    score: Scorer,
+    value_col: str,
+    corpus_id: str,
+    corpus_vec: str,
+    desc: bool = False,
+    extra: tuple[str, ...] = (),
+    payload: str | None = None,
+) -> DataFrame:
+    """Top-k corpus rows per query, ties by corpus id:
+    [qid, <corpus_id>, <value_col>, rk] plus ``payload`` (cast to
+    string). ``score(mat, pdf)`` yields, for each query in ``qids``
+    order, the mask of the batch rows it ranks and their values;
+    ``desc`` ranks the values descending. ``extra`` corpus columns
+    reach ``pdf`` as they are.
+
+    One scan of the corpus AS IT IS PARTITIONED, with no per-call
+    shuffle: a corpus read as one row group scans in one task. Where
+    the scan is CPU-bound, spread the corpus once where it is loaded
+    or built, not here. Each task keeps its per-query top-k; the
+    driver collects those ≤ queries × partitions × k candidates (a
+    computed bound) and merges them with the same (value, id)
+    lexsort. The result is a local relation: one Spark job per call
+    (none without queries), none to collect it, no shuffle.
+    """
+    pay = F.col(payload) if payload else F.lit(None)
+    src = corpus.select(
+        F.col(corpus_id).cast("long").alias("_id"),
+        F.col(corpus_vec).alias("_vec"),
+        pay.cast("string").alias("_pay"),
+        *extra,
+    )
+
+    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        best: dict[int, tuple[np.ndarray, ...]] = {}
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            mat = _mat(pdf["_vec"])
+            ids, pays = pdf["_id"].to_numpy(), pdf["_pay"].to_numpy(dtype=object)
+            for qi, (m, vals) in enumerate(score(mat, pdf)):
+                cand = (vals, ids[m], pays[m])
+                if qi in best:
+                    cand = tuple(np.concatenate(p) for p in zip(best[qi], cand))
+                order = np.lexsort((cand[1], -cand[0] if desc else cand[0]))[:k]
+                best[qi] = tuple(a[order] for a in cand)
+        for qi, (vals, bids, bpays) in best.items():
+            yield pd.DataFrame({"qid": qids[qi], "_id": bids, "_v": vals, "_pay": bpays})
+
+    schema = "qid long, _id long, _v double, _pay string"
+    rows = src.mapInPandas(kern, schema).collect() if qids else []
+    qs, ids, vals = (np.array([r[i] for r in rows]) for i in range(3))
+    merged, rk = [], 0
+    for i in np.lexsort((ids, -vals if desc else vals, qs)):
+        rk = rk + 1 if merged and merged[-1][0] == qs[i] else 1
+        if rk <= k:
+            merged.append((int(qs[i]), int(ids[i]), float(vals[i]), rk, rows[i][3]))
+    cols = [("qid", "BIGINT"), (corpus_id, "BIGINT"), (value_col, "DOUBLE"), ("rk", "BIGINT")]
+    out = local_frame(corpus.sparkSession, cols + [("_pay", "STRING")], merged)
+    return out.withColumnRenamed("_pay", payload) if payload else out.drop("_pay")
+
+
+def _cosine(
+    qmat: np.ndarray,
+    cells: Callable[[np.ndarray, pd.DataFrame], np.ndarray] | None = None,
+    probes: list | None = None,
+) -> Scorer:
+    """Scorer for exact cosine: rows where either norm is 0 never
+    rank; with ``cells``, query qi ranks only the rows whose cell is
+    in ``probes[qi]``."""
+    qn = norms_ltr(qmat)
+
+    def score(mat: np.ndarray, pdf: pd.DataFrame):
+        cn = norms_ltr(mat)
+        cell = cells(mat, pdf) if cells else None
+        for qi in range(len(qmat)):
+            d = cn * qn[qi]
+            ok = d != 0.0
+            if cell is not None:
+                ok &= np.isin(cell, probes[qi])
+            yield ok, dots_ltr(mat[ok], qmat[qi]) / d[ok]
+
+    return score
 
 
 # ---------------------------------------------------------------------------
@@ -105,50 +202,11 @@ def cosine_topk_np(
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
 ) -> DataFrame:
-    """Exact cosine top-k per query. The query side is collected
-    (documented-small: it broadcasts inside the kernel closure); the
-    corpus streams through mapInPandas; each task emits ≤ q×k
-    candidates; one final window ranks q×k×partitions rows.
-    """
-    qrows = queries.select("qid", "qvec").collect()
-    qids = [int(r["qid"]) for r in qrows]
-    qmat = np.array([r["qvec"] for r in qrows], dtype=np.float64)
-    qnorms = norms_ltr(qmat)
-
-    spark = corpus.sparkSession
-    n = spark.sparkContext.defaultParallelism
-    src = corpus.select(
-        F.col(corpus_id).cast("long").alias("_id"), F.col(corpus_vec).alias("_vec")
-    ).repartition(n)
-
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        best: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = _mat(pdf["_vec"])
-            ids = pdf["_id"].to_numpy()
-            cn = norms_ltr(mat)
-            for qi, qid in enumerate(qids):
-                d = cn * qnorms[qi]
-                ok = d != 0.0
-                sims = dots_ltr(mat[ok], qmat[qi]) / d[ok]
-                bids = ids[ok]
-                if qid in best:
-                    sims = np.concatenate([best[qid][0], sims])
-                    bids = np.concatenate([best[qid][1], bids])
-                keep = _topk_desc(sims, bids, k)
-                best[qid] = (sims[keep], bids[keep])
-        for qid, (sims, bids) in best.items():
-            yield pd.DataFrame({"qid": qid, "_id": bids, "sim": sims})
-
-    cand = src.mapInPandas(kern, "qid long, _id long, sim double")
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("_id"))
-    return (
-        cand.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
-        .select("qid", F.col("_id").alias(corpus_id), "sim", "rk")
-    )
+    """Exact cosine top-k per query, ties by corpus id:
+    [qid, <corpus_id>, sim, rk]. One scan of the corpus as it is
+    partitioned, merged on the driver (see _scan_topk)."""
+    qids, qmat = _queries(queries)
+    return _scan_topk(corpus, qids, k, _cosine(qmat), "sim", corpus_id, corpus_vec, desc=True)
 
 
 # ---------------------------------------------------------------------------
@@ -166,50 +224,16 @@ def knn_l2_np(
 ) -> DataFrame:
     """Exact kNN by squared L2, ties by corpus id:
     [qid, <corpus_id>, dist, rk] plus ``payload`` (cast to string).
-
-    One scan of the corpus AS IT IS PARTITIONED — set the index's
-    parallelism once where it is built, never per call. Each task
-    keeps its per-query top-k; the driver collects those ≤ queries ×
-    partitions × k candidates (a computed bound) and merges them with
-    the same (dist, id) lexsort. The result is a local relation: one
-    Spark job per call, none to collect it, no shuffle.
+    One scan of the corpus as it is partitioned, merged on the driver
+    (see _scan_topk).
     """
-    qrows = queries.select("qid", "qvec").collect()
-    qids = [int(r["qid"]) for r in qrows]
-    qmat = np.array([r["qvec"] for r in qrows], dtype=np.float64)
-    pay = F.col(payload) if payload else F.lit(None)
-    src = corpus.select(
-        F.col(corpus_id).cast("long").alias("_id"),
-        F.col(corpus_vec).alias("_vec"),
-        pay.cast("string").alias("_pay"),
-    )
+    qids, qmat = _queries(queries)
 
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        best: dict[int, tuple[np.ndarray, ...]] = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = _mat(pdf["_vec"])
-            ids, pays = pdf["_id"].to_numpy(), pdf["_pay"].to_numpy(dtype=object)
-            for qi, qid in enumerate(qids):
-                cand = (sqdists_ltr(mat, qmat[qi]), ids, pays)
-                if qid in best:
-                    cand = tuple(np.concatenate(p) for p in zip(best[qid], cand))
-                order = np.lexsort((cand[1], cand[0]))[:k]
-                best[qid] = tuple(a[order] for a in cand)
-        for qid, (dists, bids, bpays) in best.items():
-            yield pd.DataFrame({"qid": qid, "_id": bids, "dist": dists, "_pay": bpays})
+    def score(mat: np.ndarray, pdf: pd.DataFrame):
+        for q in qmat:
+            yield slice(None), sqdists_ltr(mat, q)
 
-    rows = src.mapInPandas(kern, "qid long, _id long, dist double, _pay string").collect()
-    qs, ids, dists = (np.array([r[i] for r in rows]) for i in range(3))
-    merged, rk = [], 0
-    for i in np.lexsort((ids, dists, qs)):
-        rk = rk + 1 if merged and merged[-1][0] == qs[i] else 1
-        if rk <= k:
-            merged.append((int(qs[i]), int(ids[i]), float(dists[i]), rk, rows[i][3]))
-    cols = [("qid", "BIGINT"), (corpus_id, "BIGINT"), ("dist", "DOUBLE"), ("rk", "BIGINT")]
-    out = local_frame(corpus.sparkSession, cols + [("_pay", "STRING")], merged)
-    return out.withColumnRenamed("_pay", payload) if payload else out.drop("_pay")
+    return _scan_topk(corpus, qids, k, score, "dist", corpus_id, corpus_vec, payload=payload)
 
 
 # ---------------------------------------------------------------------------
@@ -218,35 +242,15 @@ def knn_l2_np(
 # ---------------------------------------------------------------------------
 
 
-def rp_lsh_assign(
-    corpus: DataFrame,
-    planes: list[list[float]],
-    corpus_vec: str = "embedding",
-    out_col: str = "bucket",
-) -> DataFrame:
-    """Sign-bit bucket per vector: bit i = (dot(v, plane_i) >= 0);
+def _buckets(mat: np.ndarray, pmat: np.ndarray) -> np.ndarray:
+    """Sign-bit bucket per row: bit i = (dot(row, plane_i) >= 0);
     bucket = Σ bit_i · 2^i. Cosine-similar vectors agree on most sign
     bits → same bucket with high probability. Deterministic given
-    fixed planes (plans.constants.det_vector seeds). The bucket
-    column doubles as a blocking key for near-dup at scale."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    pmat = np.array(planes, dtype=np.float64)
-
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = _mat(pdf[corpus_vec])
-            bucket = np.zeros(len(mat), dtype=np.int64)
-            for i in range(len(pmat)):
-                bucket |= (dots_ltr(mat, pmat[i]) >= 0.0).astype(np.int64) << i
-            out = pdf.copy()
-            out[out_col] = bucket.astype(np.int32)
-            yield out
-
-    schema = StructType(list(corpus.schema.fields) + [StructField(out_col, IntegerType())])
-    return corpus.mapInPandas(kern, schema)
+    fixed planes (plans.constants.det_vector seeds)."""
+    bucket = np.zeros(len(mat), dtype=np.int64)
+    for i in range(len(pmat)):
+        bucket |= (dots_ltr(mat, pmat[i]) >= 0.0).astype(np.int64) << i
+    return bucket
 
 
 def rp_lsh_ann(
@@ -258,69 +262,17 @@ def rp_lsh_ann(
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
 ) -> DataFrame:
-    """Approximate cosine top-k: probe the query's own bucket plus
-    every bucket at Hamming distance ≤ multiprobe_bits, exact cosine
-    within probed buckets. Same candidate-then-rank shape as IVF
-    search: the bucket predicate prunes the scan (partition pruning
-    over a bucket-partitioned corpus), per-partition top-k bounds the
-    shuffle to q×k rows per task."""
-    qrows = queries.select("qid", "qvec").collect()
-    qids = [int(r["qid"]) for r in qrows]
-    qmat = np.array([r["qvec"] for r in qrows], dtype=np.float64)
+    """Approximate cosine top-k: probe the query's own bucket plus,
+    with multiprobe_bits ≥ 1, every bucket at Hamming distance 1;
+    exact cosine within probed buckets. The kernel buckets each corpus
+    row from the vectors it already holds, in the same single scan as
+    cosine_topk_np (see _scan_topk)."""
+    qids, qmat = _queries(queries)
     pmat = np.array(planes, dtype=np.float64)
-    qnorms = norms_ltr(qmat)
-    nb = len(planes)
-
-    probe: dict[int, set[int]] = {}
-    for qi, qid in enumerate(qids):
-        b = 0
-        for i in range(nb):
-            b |= int(dots_ltr(qmat[qi : qi + 1], pmat[i])[0] >= 0.0) << i
-        cells = {b}
-        if multiprobe_bits >= 1:
-            cells |= {b ^ (1 << i) for i in range(nb)}
-        probe[qid] = cells
-    all_cells = sorted(set().union(*probe.values()))
-
-    tagged = rp_lsh_assign(corpus, planes, corpus_vec=corpus_vec)
-    src = tagged.filter(F.col("bucket").isin(all_cells)).select(
-        F.col(corpus_id).cast("long").alias("_id"),
-        F.col(corpus_vec).alias("_vec"),
-        F.col("bucket").cast("int").alias("_cell"),
-    )
-
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        best: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = _mat(pdf["_vec"])
-            ids = pdf["_id"].to_numpy()
-            cells = pdf["_cell"].to_numpy()
-            cn = norms_ltr(mat)
-            for qi, qid in enumerate(qids):
-                m = np.isin(cells, list(probe[qid]))
-                if not m.any():
-                    continue
-                d = cn[m] * qnorms[qi]
-                ok = d != 0.0
-                sims = dots_ltr(mat[m][ok], qmat[qi]) / d[ok]
-                bids = ids[m][ok]
-                if qid in best:
-                    sims = np.concatenate([best[qid][0], sims])
-                    bids = np.concatenate([best[qid][1], bids])
-                keep = _topk_desc(sims, bids, k)
-                best[qid] = (sims[keep], bids[keep])
-        for qid, (sims, bids) in best.items():
-            yield pd.DataFrame({"qid": qid, "_id": bids, "sim": sims})
-
-    cand = src.mapInPandas(kern, "qid long, _id long, sim double")
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("_id"))
-    return (
-        cand.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
-        .select("qid", F.col("_id").alias(corpus_id), "sim", "rk")
-    )
+    flips = [0] + ([1 << i for i in range(len(pmat))] if multiprobe_bits >= 1 else [])
+    probes = [[int(b) ^ f for f in flips] for b in _buckets(qmat, pmat)]
+    score = _cosine(qmat, lambda mat, pdf: _buckets(mat, pmat), probes)
+    return _scan_topk(corpus, qids, k, score, "sim", corpus_id, corpus_vec, desc=True)
 
 
 # ---------------------------------------------------------------------------
@@ -467,9 +419,9 @@ def ivf_assign_np(
     keep_dist: bool = False,
 ) -> DataFrame:
     """Nearest-centroid cell per vector (ties → lowest centroid
-    index, matching least(struct(d, c)) and np.argmin); with
+    index, as np.argmin and the SQL twin's sorted (d, c) structs); with
     ``keep_dist``, also the squared-L2 to that centroid (ltr fold —
-    bit-identical with the expression path and the SQL twin)."""
+    bit-identical with the SQL twin)."""
     from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
     cmat = np.array(centroids, dtype=np.float64)
@@ -620,61 +572,19 @@ def ivf_search_cosine_np(
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
 ) -> DataFrame:
-    """Probe the nprobe nearest cells per query; exact cosine top-k
-    within probed cells. The `cell.isin(probed)` filter is a plain
-    Catalyst predicate — over a corpus written partitioned by cell it
-    becomes partition pruning, which is the IVF payoff at scale."""
-    qrows = queries.select("qid", "qvec").collect()
-    qids = [int(r["qid"]) for r in qrows]
-    qmat = np.array([r["qvec"] for r in qrows], dtype=np.float64)
+    """Probe the nprobe nearest cells per query (ties → lowest
+    centroid index); exact cosine top-k within probed cells, in the
+    same single scan as cosine_topk_np (see _scan_topk). The
+    `cell.isin(probed)` filter is a plain Catalyst predicate — over a
+    corpus written partitioned by cell it becomes partition pruning,
+    which is the IVF payoff at scale."""
+    qids, qmat = _queries(queries)
     cmat = np.array(centroids, dtype=np.float64)
-    # per-query probed cells (tiny, driver-side numpy)
-    probe: dict[int, set[int]] = {}
-    for qi, qid in enumerate(qids):
-        cd = sqdists_ltr(cmat, qmat[qi])
-        order = np.lexsort((np.arange(len(cmat)), cd))[:nprobe]
-        probe[qid] = {int(c) for c in order}
-    all_cells = sorted(set().union(*probe.values()))
-    qnorms = norms_ltr(qmat)
-
-    src = corpus_with_cells.filter(F.col("cell").isin(all_cells)).select(
-        F.col(corpus_id).cast("long").alias("_id"),
-        F.col(corpus_vec).alias("_vec"),
-        F.col("cell").cast("int").alias("_cell"),
-    )
-
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        best: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = _mat(pdf["_vec"])
-            ids = pdf["_id"].to_numpy()
-            cells = pdf["_cell"].to_numpy()
-            cn = norms_ltr(mat)
-            for qi, qid in enumerate(qids):
-                m = np.isin(cells, list(probe[qid]))
-                if not m.any():
-                    continue
-                d = cn[m] * qnorms[qi]
-                ok = d != 0.0
-                sims = dots_ltr(mat[m][ok], qmat[qi]) / d[ok]
-                bids = ids[m][ok]
-                if qid in best:
-                    sims = np.concatenate([best[qid][0], sims])
-                    bids = np.concatenate([best[qid][1], bids])
-                keep = _topk_desc(sims, bids, k)
-                best[qid] = (sims[keep], bids[keep])
-        for qid, (sims, bids) in best.items():
-            yield pd.DataFrame({"qid": qid, "_id": bids, "sim": sims})
-
-    cand = src.mapInPandas(kern, "qid long, _id long, sim double")
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("_id"))
-    return (
-        cand.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
-        .select("qid", F.col("_id").alias(corpus_id), "sim", "rk")
-    )
+    probes = [np.lexsort((np.arange(len(cmat)), sqdists_ltr(cmat, q)))[:nprobe] for q in qmat]
+    probed = sorted({int(c) for p in probes for c in p})
+    src = corpus_with_cells.filter(F.col("cell").isin(probed))
+    score = _cosine(qmat, lambda mat, pdf: pdf["cell"].to_numpy(), probes)
+    return _scan_topk(src, qids, k, score, "sim", corpus_id, corpus_vec, desc=True, extra=("cell",))
 
 
 # ---------------------------------------------------------------------------
@@ -728,9 +638,9 @@ def blocked_neardup_pairs(
     blocking composed with EXACT cosine verification inside each block.
 
     ``bands[b]`` is a list of hyperplanes; a vector's block key in band
-    b is its sign-bit bucket over those planes (same hash family as
-    rp_lsh_assign). Two vectors become a candidate pair iff they share
-    a bucket in AT LEAST ONE band — the classic OR-of-ANDs LSH banding
+    b is its sign-bit bucket over those planes (_buckets, the hash
+    rp_lsh_ann probes). Two vectors become a candidate pair iff they
+    share a bucket in AT LEAST ONE band — the classic OR-of-ANDs LSH banding
     that trades bands (recall) against planes-per-band (block size).
     Every emitted pair carries its exact cosine (left-to-right kernel,
     bit-exact with the SQL twin), so precision is 1.0 by construction;
@@ -756,13 +666,10 @@ def blocked_neardup_pairs(
             mat = _mat(pdf[vec_col])
             ids = pdf[id_col].to_numpy()
             for b, pmat in enumerate(nb_planes):
-                bucket = np.zeros(len(mat), dtype=np.int64)
-                for i in range(len(pmat)):
-                    bucket |= (dots_ltr(mat, pmat[i]) >= 0.0).astype(np.int64) << i
                 yield pd.DataFrame(
                     {
                         "band": np.full(len(mat), b, dtype=np.int32),
-                        "bucket": bucket,
+                        "bucket": _buckets(mat, pmat),
                         "_id": ids.astype(np.int64),
                         "_vec": pdf[vec_col].to_numpy(),
                     }

@@ -1,4 +1,6 @@
-"""Dual-encoding contract for event time (catalog.normalize_event_time).
+"""Catalog contracts: the dual encoding of event time
+(catalog.normalize_event_time) and the bit-exact values of
+catalog.local_frame.
 
 The driver's `events.ts` has shipped as parquet TIMESTAMP(NANOS) in
 one testdata generation and as timestamp[us] (with and without a UTC
@@ -14,7 +16,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from ai_data_pipeline_spark.catalog import normalize_event_time
+from ai_data_pipeline_spark.catalog import local_frame, normalize_event_time
 
 # whole-µs instants: representable exactly in every encoding under test
 _INSTANTS_US = [
@@ -75,3 +77,32 @@ def test_ntz_branch_enforces_utc_under_non_utc_session(spark, encoded_paths):
         assert ns == {eid: us * 1000 for eid, us in enumerate(_INSTANTS_US)}
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def test_local_frame_values_round_trip_bit_exact(spark):
+    """Inlined doubles and longs come back with the same bits, extremes,
+    signed zero and non-finite values included; strings (bound as
+    parameters) keep their quotes and backslashes; NULL stays NULL."""
+    import math
+    import struct
+
+    doubles = [0.1, -0.0, 0.0, 5e-324, -2.2250738585072014e-308, 1.7976931348623157e308,
+               1e-05, 1e16, -123456.789e-200, 2.0 / 3.0, float("inf"), float("-inf"), float("nan")]
+    longs = [0, -1, 2**31, -(2**63), 2**63 - 1]
+    strings = ["it's", "a\\b", "", "ünï"]
+    n = max(len(doubles), len(longs), len(strings))
+    rows = [
+        (i, doubles[i % len(doubles)], longs[i % len(longs)], strings[i % len(strings)],
+         doubles[: i % 4] + [None] if i % 5 else [])
+        for i in range(n)
+    ] + [(n, None, None, None, None)]
+    cols = [("i", "BIGINT"), ("d", "DOUBLE"), ("l", "BIGINT"), ("s", "STRING"), ("a", "ARRAY<DOUBLE>")]
+    got = sorted(tuple(r) for r in local_frame(spark, cols, rows).collect())
+
+    def bits(x):
+        return None if x is None else struct.pack(">d", x) if not math.isnan(x) else "nan"
+
+    def key(r):
+        return (r[0], bits(r[1]), r[2], r[3], None if r[4] is None else [bits(x) for x in r[4]])
+
+    assert [key(r) for r in got] == [key(r) for r in rows]

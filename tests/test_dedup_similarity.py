@@ -8,8 +8,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.operators import dedup, similarity
-from ai_data_pipeline_spark.operators.vectorized import knn_l2_np
-from tests.conftest import knn_l2_twin
+from ai_data_pipeline_spark.operators.vectorized import (
+    cosine_topk_np,
+    ivf_assign_np,
+    ivf_search_cosine_np,
+    knn_l2_np,
+)
+from tests.conftest import cosine_topk_twin, ivf_assign_twin, knn_l2_twin
 
 
 def _docs(spark):
@@ -174,19 +179,22 @@ def test_knn_threshold_rejected(spark):
 
 
 def test_cosine_topk_ignores_magnitude(spark):
-    q = similarity.queries_df(spark, [[1.0, 0.0, 0.0, 0.0]])
-    out = similarity.cosine_topk(_emb(spark), q, k=2).collect()
+    qvec = [1.0, 0.0, 0.0, 0.0]
+    out = cosine_topk_np(_emb(spark), similarity.queries_df(spark, [qvec]), k=2).collect()
+    corpus = [(r.vec_id, r.embedding) for r in _emb(spark).collect()]
+    assert [tuple(r) for r in out] == cosine_topk_twin(corpus, [(0, qvec)], 2)
     # 1 and 3 are both cosine=1 with the query; tie-break by vec_id
     assert [r.vec_id for r in out] == [1, 3]
 
 
 def test_ivf_assign_and_search(spark):
     cents = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]]
-    corpus = similarity.ivf_assign(_emb(spark), cents)
-    cells = {r.vec_id: r.cell for r in corpus.collect()}
-    assert cells[1] == 0 and cells[3] == 0 and cells[2] == 1
+    corpus = ivf_assign_np(_emb(spark), cents, keep_dist=True)
+    cells = {r.vec_id: (r.cell, r.dist) for r in corpus.collect()}
+    assert cells == ivf_assign_twin([(r.vec_id, r.embedding) for r in _emb(spark).collect()], cents)
+    assert cells[1][0] == 0 and cells[3][0] == 0 and cells[2][0] == 1
     q = similarity.queries_df(spark, [[0.9, 0.05, 0.0, 0.0]])
-    out = similarity.ivf_search_cosine(corpus, q, cents, k=1, nprobe=1).collect()
+    out = ivf_search_cosine_np(corpus.drop("dist"), q, cents, k=1, nprobe=1).collect()
     assert out[0].vec_id == 1
 
 

@@ -1,6 +1,9 @@
 """Parity tests: the numpy kernels (operators/vectorized.py) must be
-BIT-IDENTICAL to the Catalyst expression path (functions/vector.py) —
-same float64 op sequence, so exact == on doubles, no tolerance.
+BIT-IDENTICAL to their references — the Catalyst expression path
+(functions/vector.py) for the all-pairs kernels, and the plain-Python
+twins in tests/conftest.py for the per-query searches (kNN, cosine
+top-k, IVF, LSH) and the IVF assignment. Same float64 op sequence, so
+exact == on doubles, no tolerance.
 """
 
 from __future__ import annotations
@@ -24,7 +27,7 @@ from ai_data_pipeline_spark.plans.constants import (
     Q27_QUERY_VECS,
     Q28_CENTROIDS,
 )
-from tests.conftest import knn_l2_twin
+from tests.conftest import cosine_topk_twin, ivf_assign_twin, knn_l2_twin
 
 
 @pytest.fixture(scope="module")
@@ -38,10 +41,9 @@ def _rows(df, *cols):
 
 def test_cosine_topk_parity(spark, emb):
     q = similarity.queries_df(spark, Q27_QUERY_VECS)
-    expr = similarity.cosine_topk(emb, q, k=5, dim=EMBED_DIM).orderBy("qid", "rk")
+    want = cosine_topk_twin(_rows(emb, "vec_id", "embedding"), list(enumerate(Q27_QUERY_VECS)), 5)
     fast = cosine_topk_np(emb, q, k=5).orderBy("qid", "rk")
-    a, b = _rows(expr, "qid", "vec_id", "sim", "rk"), _rows(fast, "qid", "vec_id", "sim", "rk")
-    assert a == b  # exact float equality — same IEEE op order
+    assert _rows(fast, "qid", "vec_id", "sim", "rk") == want  # exact ==
 
 
 def test_knn_l2_parity(spark, emb):
@@ -96,69 +98,61 @@ def test_cosine_pairs_blocked_parity(spark, emb):
 
 
 def test_ivf_parity(spark, emb):
-    expr_cells = similarity.ivf_assign(
-        emb, Q28_CENTROIDS, dim=EMBED_DIM, keep_dist=True
-    )
+    corpus = _rows(emb, "vec_id", "embedding")
     fast_cells = ivf_assign_np(emb, Q28_CENTROIDS, keep_dist=True)
-    a = {
-        r["vec_id"]: (r["cell"], r["dist"])
-        for r in expr_cells.select("vec_id", "cell", "dist").collect()
-    }
-    b = {
-        r["vec_id"]: (r["cell"], r["dist"])
-        for r in fast_cells.select("vec_id", "cell", "dist").collect()
-    }
-    assert a == b  # cell AND the squared-L2 dist, exact doubles
-    expr_cells = expr_cells.drop("dist")
-    fast_cells = fast_cells.drop("dist")
+    got = {r["vec_id"]: (r["cell"], r["dist"]) for r in fast_cells.collect()}
+    cells = ivf_assign_twin(corpus, Q28_CENTROIDS)
+    assert got == cells  # cell AND the squared-L2 dist, exact doubles
 
+    # nprobe=2: the two nearest centroids by (squared L2, index)
+    queries = list(enumerate(Q27_QUERY_VECS))
+    probes = knn_l2_twin(list(enumerate(Q28_CENTROIDS)), queries, 2)
+    want = []
+    for qid, qvec in queries:
+        probed = {c for p, c, _, _ in probes if p == qid}
+        inside = [(vid, v) for vid, v in corpus if cells[vid][0] in probed]
+        want += cosine_topk_twin(inside, [(qid, qvec)], 3)
     q = similarity.queries_df(spark, Q27_QUERY_VECS)
-    expr = similarity.ivf_search_cosine(
-        expr_cells, q, Q28_CENTROIDS, k=3, nprobe=2, dim=EMBED_DIM
-    ).orderBy("qid", "rk")
-    fast = ivf_search_cosine_np(fast_cells, q, Q28_CENTROIDS, k=3, nprobe=2).orderBy("qid", "rk")
-    assert _rows(expr, "qid", "vec_id", "sim", "rk") == _rows(fast, "qid", "vec_id", "sim", "rk")
+    fast = ivf_search_cosine_np(fast_cells.drop("dist"), q, Q28_CENTROIDS, k=3, nprobe=2)
+    assert _rows(fast.orderBy("qid", "rk"), "qid", "vec_id", "sim", "rk") == want
 
 
 def test_rp_lsh(spark, emb):
     from ai_data_pipeline_spark.operators.vectorized import (
+        _buckets,
         dots_ltr,
         rp_lsh_ann,
-        rp_lsh_assign,
     )
     import numpy as np
 
     from ai_data_pipeline_spark.plans.constants import Q38_PLANES
 
-    tagged = rp_lsh_assign(emb, Q38_PLANES)
-    rows = tagged.select("vec_id", "embedding", "bucket").collect()
+    rows = emb.select("vec_id", "embedding").collect()
     pmat = np.array(Q38_PLANES, dtype=np.float64)
-    for r in rows[:50]:
-        v = np.array([r["embedding"]], dtype=np.float64)
-        expect = 0
-        for i in range(len(pmat)):
-            expect |= int(dots_ltr(v, pmat[i])[0] >= 0.0) << i
-        assert r["bucket"] == expect
-    assert tagged.select("bucket").distinct().count() <= 2 ** len(Q38_PLANES)
 
-    # ANN: every hit must lie in the query's probe set, and its sim
-    # must equal the exact brute-force cosine for that (query, id)
-    q = similarity.queries_df(spark, Q27_QUERY_VECS)
-    ann = rp_lsh_ann(emb, q, Q38_PLANES, k=3, multiprobe_bits=1).collect()
-    assert len(ann) > 0
-    exact = {
-        (r["qid"], r["vec_id"]): r["sim"]
-        for r in cosine_topk_np(emb, q, k=emb.count()).collect()
-    }
-    bucket_of = {r["vec_id"]: r["bucket"] for r in rows}
-    qmat = np.array(Q27_QUERY_VECS, dtype=np.float64)
-    for r in ann:
-        assert exact[(r["qid"], r["vec_id"])] == r["sim"]  # bit-exact
-        qb = 0
+    def bucket(vec):
+        v = np.array([vec], dtype=np.float64)
+        b = 0
         for i in range(len(pmat)):
-            qb |= int(dots_ltr(qmat[r["qid"] : r["qid"] + 1], pmat[i])[0] >= 0.0) << i
-        hamming = bin(qb ^ bucket_of[r["vec_id"]]).count("1")
-        assert hamming <= 1  # multiprobe_bits=1
+            b |= int(dots_ltr(v, pmat[i])[0] >= 0.0) << i
+        return b
+
+    got = _buckets(np.array([r["embedding"] for r in rows], dtype=np.float64), pmat)
+    assert [int(b) for b in got] == [bucket(r["embedding"]) for r in rows]
+    assert len(set(got.tolist())) <= 2 ** len(Q38_PLANES)
+
+    # ANN: exactly the exact cosine top-3 over the rows whose bucket is
+    # within Hamming distance 1 of the query's (multiprobe_bits=1)
+    q = similarity.queries_df(spark, Q27_QUERY_VECS)
+    ann = rp_lsh_ann(emb, q, Q38_PLANES, k=3, multiprobe_bits=1).orderBy("qid", "rk")
+    bucket_of = {r["vec_id"]: bucket(r["embedding"]) for r in rows}
+    want = []
+    for qid, qvec in enumerate(Q27_QUERY_VECS):
+        qb = bucket(qvec)
+        probed = [(r["vec_id"], r["embedding"]) for r in rows if bin(qb ^ bucket_of[r["vec_id"]]).count("1") <= 1]
+        want += cosine_topk_twin(probed, [(qid, qvec)], 3)
+    assert len(want) > 0
+    assert _rows(ann, "qid", "vec_id", "sim", "rk") == want  # exact ==
 
 
 def test_knn_threshold_boundary(spark, emb):
