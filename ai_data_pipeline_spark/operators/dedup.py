@@ -15,8 +15,8 @@ a DataFrame→DataFrame function designed for 100 TB:
 - SimHash: 64 per-bit weighted sums (one groupBy, all map-side
   combinable), Hamming candidates via 16-bit segment blocking
   (pigeonhole: hamming ≤ 3 ⇒ ≥1 of 4 segments equal);
-- embedding cosine: blocked all-pairs (optional blocking column)
-  with the JVM-side cosine expression.
+- embedding cosine: blocked all-pairs (optional blocking column) in
+  the Arrow kernel ``vectorized.cosine_pairs_np``.
 
 The reference has only implicit dedup-adjacent behavior (its JSONL
 sink duplicates on rerun, `app/main.py:99` — fixed in sinks.py); the
@@ -30,7 +30,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.functions.text import WS_RUN, normalized_text, word_ngrams
-from ai_data_pipeline_spark.functions.vector import cosine
 
 
 # ---------------------------------------------------------------------------
@@ -565,59 +564,6 @@ def simhash_neardup_pairs(sims: DataFrame, max_hamming: int = 3) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# embedding cosine near-dup
-# ---------------------------------------------------------------------------
-
-def embedding_neardup_pairs(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_col: str | None = None,
-    min_cosine: float | None = None,
-    dim: int | None = None,
-) -> DataFrame:
-    """All-pairs cosine similarity, optionally blocked.
-
-    Blocking is the scale lever: with a block column (cluster id,
-    LSH bucket, IVF cell — see vectorized.ivf_assign_np) the join is
-    equi on the block and the quadratic blowup is per-block. Without
-    one this is a corpus² scan — only for small/sampled corpora.
-    Output: [id_a, id_b, sim].
-    """
-    from ai_data_pipeline_spark.functions.vector import dot, norm
-
-    cols = [F.col(id_col).alias("id"), F.col(vec_col).alias("vec")] + (
-        [F.col(block_col).alias("blk")] if block_col else []
-    )
-    # Precompute each vector's norm ONCE (higher-order array
-    # expressions are interpreted, not codegen'd — recomputing two
-    # norms per PAIR instead of per VECTOR tripled the hot loop).
-    v = emb.select(*cols).withColumn("nrm", norm("vec", dim))
-    a, b = v.alias("a"), v.alias("b")
-    cond = F.col("a.id") < F.col("b.id")
-    if block_col:
-        cond = (F.col("a.blk") == F.col("b.blk")) & cond
-    else:
-        # blockless all-pairs compiles to a broadcast nested-loop
-        # join that inherits the stream side's partitioning (often 1
-        # small file = 1 task): spread the probe side so the O(n²)
-        # pair evaluation parallelizes across all cores
-        a = (
-            v.repartition(emb.sparkSession.sparkContext.defaultParallelism)
-            .alias("a")
-        )
-    d = F.col("a.nrm") * F.col("b.nrm")
-    out = a.join(b, cond).select(
-        F.col("a.id").alias("id_a"),
-        F.col("b.id").alias("id_b"),
-        F.when(d != 0, dot(F.col("a.vec"), F.col("b.vec"), dim) / d).alias("sim"),
-    )
-    if min_cosine is not None:
-        out = out.filter(F.col("sim") >= min_cosine)
-    return out
-
-
-# ---------------------------------------------------------------------------
 # benchmark contamination
 # ---------------------------------------------------------------------------
 
@@ -653,75 +599,12 @@ def shingle_overlap(
 # pair → cluster resolution (connected components)
 # ---------------------------------------------------------------------------
 
-def dedup_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
-    """Resolve near-dup PAIRS into CLUSTERS: [id, cluster_id] where
-    cluster_id is the minimum id in the connected component. The
-    missing last step of every pair-producing dedup (jaccard /
-    minhash / simhash / cosine emit pairs; dedup policy needs one
-    keeper per component, e.g. ``filter(id != cluster_id)`` drops).
-
-    Algorithm: iterative min-label propagation to neighbors until a
-    fixed point; converges in component-diameter rounds — near-dup
-    clusters are small and dense, so diameter is tiny. Each round is
-    one join + one agg (labels and edges both partition by id), and
-    ``localCheckpoint`` truncates the lineage so the plan doesn't
-    grow with iterations. For graphs with long chains at 100 TB use
-    :func:`dedup_clusters_star` (alternating large-star/small-star,
-    O(log n) rounds regardless of diameter) — same output contract.
-    """
-    edges = pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-    # checkpoint the edge list ONCE: sym joins into every round, and
-    # without truncation each round re-executes the whole upstream
-    # pair-producing DAG (shingling + self-join) — measured 2x+ on the
-    # q84 shape at sf0.1
-    sym = (
-        edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
-    labels = sym.select(F.col("a").alias("id")).distinct().withColumn("label", F.col("id"))
-    return _propagate_min_labels(sym, labels, max_iter)
-
-
-def _propagate_min_labels(sym: DataFrame, labels: DataFrame, max_iter: int) -> DataFrame:
-    for _ in range(max_iter):
-        nbr_min = (
-            sym.join(
-                labels.select(F.col("id").alias("b"), F.col("label").alias("nl")), "b"
-            )
-            .groupBy("a")
-            .agg(F.min("nl").alias("nbr_min"))
-            .select(F.col("a").alias("id"), "nbr_min")
-        )
-        new_labels = (
-            labels.join(nbr_min, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_min"), F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels.select("id", F.col("label").alias("cluster_id"))
-
-
 def _clusters_union_find_local(
     edges: DataFrame, id_type
 ) -> DataFrame:
     """Driver-side union-find over an already-BOUNDED edge list (the
     caller gates on edge count) — same [id, cluster_id = min member]
-    contract as the distributed paths, exact and deterministic.
+    contract as the distributed star path, exact and deterministic.
 
     Transfer is Arrow-batched both ways (``toPandas`` in,
     ``createDataFrame(pandas)`` out) and the solve runs over
@@ -772,11 +655,13 @@ def dedup_clusters_star(
 ) -> DataFrame:
     """Connected components via alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14 — public algorithm): same [id, cluster_id = min member]
-    contract as ``dedup_clusters``, but convergence is O(log n) rounds
-    REGARDLESS of component diameter — the recipe for long chains
-    (transitive near-dup runs, web-graph-shaped dup structure) where
-    min-label propagation needs diameter rounds.
+    SoCC'14 — public algorithm): resolve near-dup PAIRS into
+    CLUSTERS, [id, cluster_id = min member of the connected
+    component]; ``filter(id != cluster_id)`` lists the drops.
+    Convergence is O(log n) rounds REGARDLESS of component diameter —
+    the recipe for long chains (transitive near-dup runs,
+    web-graph-shaped dup structure) where min-label propagation needs
+    diameter rounds.
 
     Each round is two groupBy-per-node passes over the edge list:
 
@@ -939,10 +824,7 @@ def semantic_dedup(
        term is Σ|cell|², never corpus², the same bound the paper
        exploits, and the arithmetic is the left-to-right float64
        fold that is bit-exact with the SQL twin; size cells with
-       ``vectorized.planes_for_occupancy``-style occupancy math.
-       The interpreted HOF expression path
-       (:func:`embedding_neardup_pairs`) computes the identical
-       pairs ~20× slower — measured 16.1 s vs <1 s at 2,000 vecs);
+       ``vectorized.planes_for_occupancy``-style occupancy math);
     3. component resolution (:func:`dedup_clusters_star` — O(log n)
        star-contraction rounds with the count-gated driver
        union-find for small edge sets) + min-id keeper

@@ -258,18 +258,17 @@ def rp_lsh_ann(
     queries: DataFrame,
     planes: list[list[float]],
     k: int,
-    multiprobe_bits: int = 1,
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
 ) -> DataFrame:
-    """Approximate cosine top-k: probe the query's own bucket plus,
-    with multiprobe_bits ≥ 1, every bucket at Hamming distance 1;
-    exact cosine within probed buckets. The kernel buckets each corpus
-    row from the vectors it already holds, in the same single scan as
+    """Approximate cosine top-k: probe the query's own bucket and
+    every bucket at Hamming distance 1 from it; exact cosine within
+    probed buckets. The kernel buckets each corpus row from the
+    vectors it already holds, in the same single scan as
     cosine_topk_np (see _scan_topk)."""
     qids, qmat = _queries(queries)
     pmat = np.array(planes, dtype=np.float64)
-    flips = [0] + ([1 << i for i in range(len(pmat))] if multiprobe_bits >= 1 else [])
+    flips = [0] + [1 << i for i in range(len(pmat))]
     probes = [[int(b) ^ f for f in flips] for b in _buckets(qmat, pmat)]
     score = _cosine(qmat, lambda mat, pdf: _buckets(mat, pmat), probes)
     return _scan_topk(corpus, qids, k, score, "sim", corpus_id, corpus_vec, desc=True)
@@ -278,6 +277,39 @@ def rp_lsh_ann(
 # ---------------------------------------------------------------------------
 # All-pairs cosine (Q26 / embedding near-dup) — blocked
 # ---------------------------------------------------------------------------
+
+
+def _block_pairs(
+    ids_a: np.ndarray,
+    mat_a: np.ndarray,
+    ids_b: np.ndarray,
+    mat_b: np.ndarray,
+    same_block: bool,
+    min_cosine: float | None,
+    pair_topk: int | None,
+) -> pd.DataFrame:
+    """Exact cosine of every row pair across one block pair:
+    [id_a, id_b, sim] oriented (min id, max id). A pair whose norm
+    product is 0 never emits. ``same_block`` (a and b hold the same
+    rows) keeps only id_a < id_b, which drops self-pairs and the
+    double count. Then the ``min_cosine`` filter and the block pair's
+    top-``pair_topk`` by (sim DESC, id_a, id_b)."""
+    dots = cross_dots_ltr(mat_a, mat_b)
+    denom = norms_ltr(mat_a)[:, None] * norms_ltr(mat_b)[None, :]
+    ia = np.repeat(ids_a, len(ids_b))
+    ib = np.tile(ids_b, len(ids_a))
+    sims = np.where(denom != 0.0, dots / np.where(denom == 0.0, 1.0, denom), np.nan).ravel()
+    keep = (ia != ib) & ~np.isnan(sims)
+    if same_block:
+        keep &= ia < ib
+    lo, hi, sims = np.minimum(ia, ib)[keep], np.maximum(ia, ib)[keep], sims[keep]
+    if min_cosine is not None:
+        m = sims >= min_cosine
+        lo, hi, sims = lo[m], hi[m], sims[m]
+    if pair_topk is not None and len(sims) > pair_topk:
+        order = np.lexsort((hi, lo, -sims))[:pair_topk]
+        lo, hi, sims = lo[order], hi[order], sims[order]
+    return pd.DataFrame({"id_a": lo, "id_b": hi, "sim": sims})
 
 
 def cosine_pairs_np(
@@ -377,32 +409,15 @@ def cosine_pairs_np(
         for pdf in batches:
             for _, row in pdf.iterrows():
                 ra, rb = row["rows_a"], row["rows_b"]
-                ids_a = np.array([r["_id"] for r in ra], dtype=np.int64)
-                ids_b = np.array([r["_id"] for r in rb], dtype=np.int64)
-                mat_a = np.stack([r["_vec"] for r in ra]).astype(np.float64)
-                mat_b = np.stack([r["_vec"] for r in rb]).astype(np.float64)
-                na, nb = norms_ltr(mat_a), norms_ltr(mat_b)
-                dots = cross_dots_ltr(mat_a, mat_b)
-                denom = na[:, None] * nb[None, :]
-                # orientation: emitted pair is (min_id, max_id); the
-                # id_a < id_b mask also kills self-pairs and the
-                # double-count within a same-block pair
-                ia = np.repeat(ids_a, len(ids_b))
-                ib = np.tile(ids_b, len(ids_a))
-                sims = np.where(denom != 0.0, dots / np.where(denom == 0.0, 1.0, denom), np.nan).ravel()
-                lo = np.minimum(ia, ib)
-                hi = np.maximum(ia, ib)
-                keep = (ia != ib) & ~np.isnan(sims)
-                if int(row["bid_a"]) == int(row["bid_b"]):
-                    keep &= ia < ib
-                lo, hi, sims = lo[keep], hi[keep], sims[keep]
-                if min_cosine is not None:
-                    m = sims >= min_cosine
-                    lo, hi, sims = lo[m], hi[m], sims[m]
-                if pair_topk is not None and len(sims) > pair_topk:
-                    order = np.lexsort((hi, lo, -sims))[:pair_topk]
-                    lo, hi, sims = lo[order], hi[order], sims[order]
-                yield pd.DataFrame({"id_a": lo, "id_b": hi, "sim": sims})
+                yield _block_pairs(
+                    np.array([r["_id"] for r in ra], dtype=np.int64),
+                    np.stack([r["_vec"] for r in ra]).astype(np.float64),
+                    np.array([r["_id"] for r in rb], dtype=np.int64),
+                    np.stack([r["_vec"] for r in rb]).astype(np.float64),
+                    int(row["bid_a"]) == int(row["bid_b"]),
+                    min_cosine,
+                    pair_topk,
+                )
 
     return pairs.mapInPandas(kern, "id_a long, id_b long, sim double")
 
@@ -604,28 +619,6 @@ def planes_for_occupancy(n_rows: int, target_occupancy: int = 1024) -> int:
     return max(1, math.ceil(math.log2(max(2.0, n_rows / target_occupancy))))
 
 
-def lsh_bands(
-    n_bands: int,
-    planes_per_band: int,
-    dim: int | None = None,
-    seed: int = 8200,
-) -> list[list[list[float]]]:
-    """Deterministic band geometry for blocked_neardup_pairs:
-    ``n_bands`` independent sets of ``planes_per_band`` hyperplanes
-    from the shared det_vector family (seed spacing 16 → at most 16
-    planes per band). Pair with planes_for_occupancy to scale
-    geometry with the corpus."""
-    from ai_data_pipeline_spark.plans.constants import EMBED_DIM, det_vector
-
-    if not 1 <= planes_per_band <= 16:
-        raise ValueError("planes_per_band must be in [1, 16] (seed spacing)")
-    d = dim or EMBED_DIM
-    return [
-        [det_vector(seed + 16 * b + i, d) for i in range(planes_per_band)]
-        for b in range(n_bands)
-    ]
-
-
 def blocked_neardup_pairs(
     emb: DataFrame,
     bands: list[list[list[float]]],
@@ -642,9 +635,9 @@ def blocked_neardup_pairs(
     rp_lsh_ann probes). Two vectors become a candidate pair iff they
     share a bucket in AT LEAST ONE band — the classic OR-of-ANDs LSH banding
     that trades bands (recall) against planes-per-band (block size).
-    Every emitted pair carries its exact cosine (left-to-right kernel,
-    bit-exact with the SQL twin), so precision is 1.0 by construction;
-    only recall is approximate.
+    Every emitted pair carries its exact cosine (_block_pairs, the
+    verifier cosine_pairs_np uses; bit-exact with the SQL twin), so
+    precision is 1.0 by construction; only recall is approximate.
 
     Scale contract vs the all-pairs anchor (cosine_pairs_np / q26):
     work is Σ_buckets |bucket|² instead of n². The shuffle carries
@@ -681,28 +674,8 @@ def blocked_neardup_pairs(
     )
 
     def verify(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return pd.DataFrame({"id_a": [], "id_b": [], "sim": []}).astype(
-                {"id_a": np.int64, "id_b": np.int64, "sim": np.float64}
-            )
-        mat = _mat(pdf["_vec"])
-        ids = pdf["_id"].to_numpy()
-        nrm = norms_ltr(mat)
-        dots = cross_dots_ltr(mat, mat)
-        denom = nrm[:, None] * nrm[None, :]
-        iu, ju = np.triu_indices(len(ids), k=1)
-        d = denom[iu, ju]
-        ok = d != 0.0
-        sims = dots[iu, ju][ok] / d[ok]
-        ia, ib = ids[iu][ok], ids[ju][ok]
-        lo, hi = np.minimum(ia, ib), np.maximum(ia, ib)
-        if min_cosine is not None:
-            m = sims >= min_cosine
-            lo, hi, sims = lo[m], hi[m], sims[m]
-        if pair_topk is not None and len(sims) > pair_topk:
-            order = np.lexsort((hi, lo, -sims))[:pair_topk]
-            lo, hi, sims = lo[order], hi[order], sims[order]
-        return pd.DataFrame({"id_a": lo, "id_b": hi, "sim": sims})
+        ids, mat = pdf["_id"].to_numpy(), _mat(pdf["_vec"])
+        return _block_pairs(ids, mat, ids, mat, True, min_cosine, pair_topk)
 
     pairs = tagged.groupBy("band", "bucket").applyInPandas(
         verify, "id_a long, id_b long, sim double"

@@ -679,8 +679,9 @@ def _q302_metrics(spark: SparkSession, sf_dir: str, nprobe: int,
     )
     from ai_data_pipeline_spark.plans.constants import Q27_QUERY_VECS, Q28_CENTROIDS
 
-    emb = _t(spark, sf_dir, "embeddings")
     queries = similarity.queries_df(spark, Q27_QUERY_VECS)
+    if bf is None or corpus is None:
+        emb = _t(spark, sf_dir, "embeddings")
     if bf is None:
         bf = cosine_topk_np(emb, queries, k=_Q302_K).select(
             "qid", "vec_id", F.col("rk").cast("long").alias("rk_bf")

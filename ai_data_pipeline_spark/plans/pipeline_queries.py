@@ -582,7 +582,7 @@ def q38_rp_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     queries = similarity.queries_df(spark, Q27_QUERY_VECS)
-    return rp_lsh_ann(emb, queries, Q38_PLANES, k=3, multiprobe_bits=1).orderBy("qid", "rk")
+    return rp_lsh_ann(emb, queries, Q38_PLANES, k=3).orderBy("qid", "rk")
 
 
 # ---------------------------------------------------------------------------
@@ -1370,9 +1370,9 @@ def q82_blocked_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (operators/dedup.py dedup_clusters_star, Kiveris et al. SoCC'14).
 # Scale: O(log n) rounds regardless of component diameter — the
 # 100 TB recipe for web-graph-shaped dup structure with long
-# transitive chains, where the min-label-propagation alternative
-# (dedup_clusters, kept as the simple small-cluster path) pays one
-# round per hop of diameter.
+# transitive chains, where min-label propagation would pay one round
+# per hop of diameter; edge sets under a computed count solve in a
+# driver union-find instead.
 # ---------------------------------------------------------------------------
 
 def q84_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

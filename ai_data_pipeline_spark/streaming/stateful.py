@@ -95,93 +95,3 @@ def running_user_stats(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-# --- transformWithState (Spark 4 arbitrary-state v2) ------------------------
-
-# ASCII unit separator: cannot occur in real tokens, so the state
-# set round-trips even when values contain commas/spaces.
-_SEP = "\x1f"
-
-
-def running_distinct_types(
-    events: DataFrame, key: str = "user_id", type_col: str = "event_type"
-) -> DataFrame:
-    """Per-key running DISTINCT event-type set via
-    ``transformWithStateInPandas`` — the Spark 4 stateful-v2 API
-    (typed state variables + timers on the RocksDB store), successor
-    to ``applyInPandasWithState``.
-
-    State per key is the sorted unit-separator-joined set of seen
-    types (O(1) for a bounded type domain; the \\x1f separator keeps
-    values containing commas round-trip-safe); output per batch is
-    the current (n_types, types). The FINAL answer is arrival-order-
-    invariant — a set union — so a finite replay hash-matches a batch
-    ``collect_set`` twin exactly regardless of micro-batch slicing.
-
-    Scale: one shuffle per micro-batch on the key; RocksDB holds
-    state off-heap, keyed lookups only — state size grows with
-    distinct keys, never event volume. Requires the RocksDB provider
-    (set at query start; the conf is runtime-settable).
-
-    ENVIRONMENT-GATED: the transformWithState wire protocol needs the
-    ``protobuf`` Python package (pyspark's
-    ``streaming/proto/StateMessage_pb2``), absent from this container
-    — the opt-in test in test_stateful_skew.py skips without it (the
-    same gating class as pypdf/live-LLM/real-embedding seams). The
-    in-container covered path for custom state remains
-    ``running_user_stats`` (applyInPandasWithState, fully tested).
-    """
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class DistinctTypes(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._seen = handle.getValueState(
-                "seen", StructType([StructField("types", StringType())])
-            )
-
-        def handleInputRows(self, key_tuple, rows, timerValues):
-            prev = self._seen.get()
-            seen = set(prev[0].split(_SEP)) if prev and prev[0] else set()
-            for pdf in rows:
-                seen.update(pdf[type_col].dropna().tolist())
-            joined = _SEP.join(sorted(seen))
-            self._seen.update((joined,))
-            yield pd.DataFrame(
-                {
-                    key: [key_tuple[0]],
-                    "n_types": [len(seen)],
-                    "types": [joined],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    # the output key column mirrors the grouping key's name and type
-    key_field = events.schema[key]
-    output_schema = StructType(
-        [
-            StructField(key, key_field.dataType),
-            StructField("n_types", LongType()),
-            StructField("types", StringType()),
-        ]
-    )
-    spark = events.sparkSession
-    # SESSION-GLOBAL side effect, required at query start:
-    # transformWithState only runs on the RocksDB provider, and the
-    # provider class is a session conf, not a per-query option. Any
-    # OTHER stateful query started later in this session inherits it;
-    # a query restarting from a checkpoint written under the default
-    # HDFS-backed provider would fail recovery. Documented like
-    # normalize_event_time's timezone reset (catalog.py).
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    return events.groupBy(key).transformWithStateInPandas(
-        statefulProcessor=DistinctTypes(),
-        outputStructType=output_schema,
-        outputMode="Update",
-        timeMode="None",
-    )

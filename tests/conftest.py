@@ -66,6 +66,23 @@ def cosine_topk_twin(corpus: list[tuple], queries: list[tuple], k: int) -> list[
     return out
 
 
+def cosine_pairs_twin(corpus: list[tuple], block: dict | None = None) -> list[tuple]:
+    """All-pairs exact cosine: [(id_a, id_b, sim)] for every pair with
+    id_a < id_b, ordered by (id_a, id_b); with ``block`` ({vec_id:
+    block value}) only pairs in the same block. A pair whose norm
+    product is 0 is skipped. ``corpus`` is [(vec_id, vec)]; dot and
+    norm are plain-Python left-to-right loops, sim = dot / (|a| * |b|)."""
+    rows, out = sorted(corpus), []
+    for ia, va in rows:
+        for ib, vb in rows:
+            if ia >= ib or (block is not None and block[ia] != block[ib]):
+                continue
+            d = math.sqrt(_dot(va, va)) * math.sqrt(_dot(vb, vb))
+            if d != 0.0:
+                out.append((ia, ib, _dot(va, vb) / d))
+    return out
+
+
 def ivf_assign_twin(corpus: list[tuple], centroids: list[list[float]]) -> dict:
     """Nearest centroid per vector: {vec_id: (cell, squared-L2 dist)},
     ties → lowest centroid index. ``corpus`` is [(vec_id, vec)]."""

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.operators import dedup, similarity
 from ai_data_pipeline_spark.operators.vectorized import (
+    cosine_pairs_np,
     cosine_topk_np,
     ivf_assign_np,
     ivf_search_cosine_np,
@@ -200,7 +201,7 @@ def test_ivf_assign_and_search(spark):
 
 def test_embedding_neardup_blocked(spark):
     emb = _emb(spark).withColumn("blk", F.col("vec_id") % 2)
-    pairs = dedup.embedding_neardup_pairs(emb, block_col="blk").collect()
+    pairs = cosine_pairs_np(emb, block_col="blk").collect()
     ids = {(r.id_a, r.id_b) for r in pairs}
     assert (1, 3) in ids  # same block (odd), colinear
     assert (1, 2) not in ids  # different blocks never compared
@@ -224,13 +225,14 @@ def _union_find(edges):
 
 
 def test_dedup_clusters_matches_union_find(spark):
-    """Min-label propagation == classic union-find on a graph with a
-    chain (tests multi-round convergence), a triangle, a pair, and
-    an untouched singleton-free layout."""
+    """Connected components == classic union-find on a graph with a
+    chain (tests multi-round convergence), a triangle and two pairs,
+    on both the distributed star path and the small-graph cutover."""
     edges = [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21), (7, 30)]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {r["id"]: r["cluster_id"] for r in dedup.dedup_clusters(pairs).collect()}
-    assert got == _union_find(edges)
+    for kw in ({"small_graph_edges": 0}, {}):
+        got = {r["id"]: r["cluster_id"] for r in dedup.dedup_clusters_star(pairs, **kw).collect()}
+        assert got == _union_find(edges), kw
 
 
 def test_dedup_clusters_on_real_neardup_pairs(spark):
@@ -243,11 +245,15 @@ def test_dedup_clusters_on_real_neardup_pairs(spark):
     pairs = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", n=4, min_jaccard=0.5)
     edge_list = [(r["id_a"], r["id_b"]) for r in pairs.collect()]
     assert edge_list, "smoke corpus must contain near-dups for this test"
-    got = {r["id"]: r["cluster_id"] for r in dedup.dedup_clusters(pairs).collect()}
-    assert got == _union_find(edge_list)
-    # dedup policy: keep one doc per cluster
-    keepers = {v for v in got.values()}
-    assert all(got[k] in keepers for k in got)
+    want = _union_find(edge_list)
+    # the distributed star path (small_graph_edges=0) and the default
+    # small-graph union-find cutover
+    for kw in ({"small_graph_edges": 0}, {}):
+        got = {r["id"]: r["cluster_id"] for r in dedup.dedup_clusters_star(pairs, **kw).collect()}
+        assert got == want, kw
+        # dedup policy: keep one doc per cluster
+        keepers = {v for v in got.values()}
+        assert all(got[k] in keepers for k in got)
 
 
 def test_shingle_containment_asymmetry(spark):

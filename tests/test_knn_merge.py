@@ -38,7 +38,9 @@ TWIN_CORPUS = [(r[0], r[2]) for r in ROWS]
 # so each query's own row mask decides its candidates
 QVECS = [[0.0, 0.0], [1.0, 1.0], [0.0, 2.5], [4.0, 4.0], [-4.0, -1.0]]
 CENTS = [[1.0, 0.0], [-1.0, 0.0]]  # IVF, nprobe=1: x < 0 probes cell 1, else cell 0
-PLANES = [[0.0, 1.0]]  # LSH, no multiprobe: bucket = (y >= 0)
+# LSH: bucket = (y >= 0) | (x >= 0) << 1; [-4, -1] is in bucket 0, so its
+# Hamming-1 probe leaves out bucket 3, which holds rows
+PLANES = [[0.0, 1.0], [1.0, 0.0]]
 
 
 def _ivf_twin(corpus, queries, k):
@@ -51,10 +53,13 @@ def _ivf_twin(corpus, queries, k):
 
 
 def _lsh_twin(corpus, queries, k):
+    def bucket(v):
+        return int(v[1] >= 0.0) | int(v[0] >= 0.0) << 1
+
     out = []
     for qid, q in queries:
-        same = [(i, v) for i, v in corpus if (v[1] >= 0.0) == (q[1] >= 0.0)]
-        out += cosine_topk_twin(same, [(qid, q)], k)
+        near = [(i, v) for i, v in corpus if bin(bucket(v) ^ bucket(q)).count("1") <= 1]
+        out += cosine_topk_twin(near, [(qid, q)], k)
     return out
 
 
@@ -67,7 +72,7 @@ KERNELS = {
         _ivf_twin,
         "sim",
     ),
-    "lsh": (lambda c, q, k: rp_lsh_ann(c, q, PLANES, k, multiprobe_bits=0), _lsh_twin, "sim"),
+    "lsh": (lambda c, q, k: rp_lsh_ann(c, q, PLANES, k), _lsh_twin, "sim"),
 }
 
 

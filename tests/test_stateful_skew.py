@@ -134,46 +134,3 @@ def test_rate_stream_is_streaming(spark):
     df = rate_stream(spark, rows_per_second=1)
     assert df.isStreaming
     assert set(df.columns) == {"timestamp", "value"}
-
-
-def test_transform_with_state_distinct_types_across_batches(spark, tmp_path):
-    # transformWithState speaks a protobuf protocol to the state
-    # server; the container ships pyspark without the protobuf
-    # package, so this is opt-in (pypdf/live-LLM gating class).
-    pytest.importorskip("google.protobuf")
-    from ai_data_pipeline_spark.streaming.stateful import running_distinct_types
-
-    in_dir = tmp_path / "in_tws"
-    in_dir.mkdir()
-    name = f"tws_{uuid.uuid4().hex[:8]}"
-    stream = spark.readStream.schema(EVENT_SCHEMA).json(str(in_dir))
-    out = running_distinct_types(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .start()
-    )
-    try:
-        _write_jsonl(
-            str(in_dir / "b1.json"),
-            [
-                {"ts": "2024-01-01 10:00:00", "user_id": 1, "event_type": "view", "value": 2.0},
-                {"ts": "2024-01-01 10:01:00", "user_id": 1, "event_type": "view", "value": 3.0},
-                {"ts": "2024-01-01 10:00:30", "user_id": 2, "event_type": "click", "value": 1.0},
-            ],
-        )
-        q.processAllAvailable()
-        # batch 2: user 1's set must carry over and grow
-        _write_jsonl(
-            str(in_dir / "b2.json"),
-            [{"ts": "2024-01-01 10:05:00", "user_id": 1, "event_type": "purchase", "value": 5.0}],
-        )
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.table(name).collect()
-    u1 = [(r["n_types"], r["types"]) for r in rows if r["user_id"] == 1]
-    assert u1 == [(1, "view"), (2, "purchase\x1fview")]
-    u2 = [(r["n_types"], r["types"]) for r in rows if r["user_id"] == 2]
-    assert u2 == [(1, "click")]

@@ -1,20 +1,17 @@
 """Parity tests: the numpy kernels (operators/vectorized.py) must be
-BIT-IDENTICAL to their references — the Catalyst expression path
-(functions/vector.py) for the all-pairs kernels, and the plain-Python
-twins in tests/conftest.py for the per-query searches (kNN, cosine
-top-k, IVF, LSH) and the IVF assignment. Same float64 op sequence, so
-exact == on doubles, no tolerance.
+BIT-IDENTICAL to the plain-Python twins in tests/conftest.py — the
+all-pairs cosine (cosine_pairs_twin), the per-query searches (kNN,
+cosine top-k, IVF, LSH) and the IVF assignment. Same float64 op
+sequence, so exact == on doubles, no tolerance.
 """
 
 from __future__ import annotations
-
-import math
 
 import pytest
 from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.catalog import load_table
-from ai_data_pipeline_spark.operators import dedup, similarity
+from ai_data_pipeline_spark.operators import similarity
 from ai_data_pipeline_spark.operators.vectorized import (
     cosine_pairs_np,
     cosine_topk_np,
@@ -23,11 +20,15 @@ from ai_data_pipeline_spark.operators.vectorized import (
     knn_l2_np,
 )
 from ai_data_pipeline_spark.plans.constants import (
-    EMBED_DIM,
     Q27_QUERY_VECS,
     Q28_CENTROIDS,
 )
-from tests.conftest import cosine_topk_twin, ivf_assign_twin, knn_l2_twin
+from tests.conftest import (
+    cosine_pairs_twin,
+    cosine_topk_twin,
+    ivf_assign_twin,
+    knn_l2_twin,
+)
 
 
 @pytest.fixture(scope="module")
@@ -55,46 +56,38 @@ def test_knn_l2_parity(spark, emb):
 
 def test_cosine_pairs_parity(spark, emb):
     sub = emb.filter(F.col("vec_id") < 120)
-    expr = (
-        dedup.embedding_neardup_pairs(sub, dim=EMBED_DIM)
-        .orderBy(F.desc("sim"), "id_a", "id_b")
-        .limit(25)
-    )
+    want = sorted(cosine_pairs_twin(_rows(sub, "vec_id", "embedding")), key=lambda p: (-p[2], p[0], p[1]))
     fast = (
         cosine_pairs_np(sub, pair_topk=25, rows_per_block=48)
         .orderBy(F.desc("sim"), "id_a", "id_b")
         .limit(25)
     )
-    assert _rows(expr, "id_a", "id_b", "sim") == _rows(fast, "id_a", "id_b", "sim")
+    assert _rows(fast, "id_a", "id_b", "sim") == want[:25]  # exact ==
 
 
 def test_cosine_pairs_min_cosine_full_set(spark, emb):
     """Thresholded mode returns the complete pair set (no top-k), and
     blocking must not lose or duplicate any pair."""
     sub = emb.filter(F.col("vec_id") < 80)
-    expr = dedup.embedding_neardup_pairs(sub, min_cosine=0.1, dim=EMBED_DIM)
+    want = [p for p in cosine_pairs_twin(_rows(sub, "vec_id", "embedding")) if p[2] >= 0.1]
     fast = cosine_pairs_np(sub, min_cosine=0.1, rows_per_block=17)
-    a = sorted(_rows(expr, "id_a", "id_b", "sim"))
-    b = sorted(_rows(fast, "id_a", "id_b", "sim"))
-    assert a == b
+    assert sorted(_rows(fast, "id_a", "id_b", "sim")) == want
 
 
 def test_cosine_pairs_blocked_parity(spark, emb):
     """block_col mode: the kernel evaluates EXACTLY the within-block
-    pairs the expression path does — bit-equal sims, no cross-block
-    pair, no loss under sub-splitting (rows_per_block far below the
-    largest cell forces the sub-block triangle join to engage)."""
+    pairs the twin does — bit-equal sims, no cross-block pair, no loss
+    under sub-splitting (rows_per_block far below the largest cell
+    forces the sub-block triangle join to engage)."""
     sub = ivf_assign_np(emb.filter(F.col("vec_id") < 160), Q28_CENTROIDS)
-    expr = dedup.embedding_neardup_pairs(
-        sub, block_col="cell", min_cosine=0.05, dim=EMBED_DIM
-    )
+    cells = dict(_rows(sub, "vec_id", "cell"))
+    twin = cosine_pairs_twin(_rows(sub, "vec_id", "embedding"), block=cells)
+    want = [p for p in twin if p[2] >= 0.05]
     fast = cosine_pairs_np(
         sub, block_col="cell", min_cosine=0.05, rows_per_block=13
     )
-    a = sorted(_rows(expr, "id_a", "id_b", "sim"))
-    b = sorted(_rows(fast, "id_a", "id_b", "sim"))
-    assert a == b
-    assert len(a) > 0
+    assert sorted(_rows(fast, "id_a", "id_b", "sim")) == want
+    assert len(want) > 0
 
 
 def test_ivf_parity(spark, emb):
@@ -142,9 +135,9 @@ def test_rp_lsh(spark, emb):
     assert len(set(got.tolist())) <= 2 ** len(Q38_PLANES)
 
     # ANN: exactly the exact cosine top-3 over the rows whose bucket is
-    # within Hamming distance 1 of the query's (multiprobe_bits=1)
+    # within Hamming distance 1 of the query's
     q = similarity.queries_df(spark, Q27_QUERY_VECS)
-    ann = rp_lsh_ann(emb, q, Q38_PLANES, k=3, multiprobe_bits=1).orderBy("qid", "rk")
+    ann = rp_lsh_ann(emb, q, Q38_PLANES, k=3).orderBy("qid", "rk")
     bucket_of = {r["vec_id"]: bucket(r["embedding"]) for r in rows}
     want = []
     for qid, qvec in enumerate(Q27_QUERY_VECS):
@@ -222,13 +215,8 @@ def test_blocked_neardup_recall_and_precision(spark):
 
 def test_lsh_geometry_helpers():
     """planes_for_occupancy keeps expected bucket occupancy constant
-    as the corpus grows; lsh_bands reproduces the q82 constants when
-    called with the registered geometry."""
-    from ai_data_pipeline_spark.operators.vectorized import (
-        lsh_bands,
-        planes_for_occupancy,
-    )
-    from ai_data_pipeline_spark.plans.constants import Q82_BANDS
+    as the corpus grows."""
+    from ai_data_pipeline_spark.operators.vectorized import planes_for_occupancy
 
     assert planes_for_occupancy(2_000, target_occupancy=1024) == 1
     assert planes_for_occupancy(16_000, target_occupancy=1024) == 4
@@ -237,11 +225,6 @@ def test_lsh_geometry_helpers():
         planes_for_occupancy(128_000, target_occupancy=1024)
         == planes_for_occupancy(16_000, target_occupancy=1024) + 3
     )
-    assert lsh_bands(2, 4) == Q82_BANDS  # same det_vector family
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        lsh_bands(2, 17)
 
 
 def test_semantic_dedup_matches_bruteforce(spark, emb):
