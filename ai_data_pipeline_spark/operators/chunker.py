@@ -212,22 +212,6 @@ def chunk_pipeline_python(
 
 # --- Spark side -------------------------------------------------------------
 
-def paginate(df: DataFrame, id_col: str, text_col: str, page_chars: int = 400) -> DataFrame:
-    """R2 analog: text → one row per non-empty page.
-    Output: [doc_id, page_no (1-based), page_text]."""
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def pages_udf(s: pd.Series) -> pd.Series:
-        return s.map(lambda t: paginate_text(t or "", page_chars))
-
-    return (
-        df.select(F.col(id_col).alias("doc_id"), pages_udf(F.col(text_col)).alias("pages"))
-        .select("doc_id", F.posexplode("pages").alias("page_no0", "page_text"))
-        .filter(F.length(F.trim("page_text")) > 0)  # R2 empty-page drop (app/main.py:25)
-        .select("doc_id", (F.col("page_no0") + 1).alias("page_no"), "page_text")
-    )
-
-
 def sliding_windows(
     pages: DataFrame,
     before: int = 2,

@@ -7,8 +7,12 @@ a DataFrame→DataFrame function designed for 100 TB:
   not documents);
 - n-gram Jaccard: shingle-explode + equi-join on the shingle digest —
   the join key is content-derived so co-occurring docs colocate;
-  rare-shingle filtering bounds the blowup of common shingles;
-- MinHash+LSH: fixed-seed hash family (xxhash64(seed, shingle)),
+  rare-shingle filtering bounds the blowup of common shingles. Every
+  exact Jaccard in the family ends in ``jaccard_of`` (per-side sizes,
+  one int/int division, threshold); the filters that propose candidate
+  pairs (LSH bands, the prefix filter, q282's signature store) hand
+  them to ``verify_jaccard``, the one candidates × shingles verifier;
+- MinHash+LSH: fixed-seed hash family (md5_hash60(shingle:seed)),
   signature = per-seed MIN aggregate (map-side combinable!), banding
   → candidate pairs via self-join on (band, band-digest). At scale
   the only wide exchange carries (doc_id, 8-byte band digest) rows;
@@ -116,6 +120,65 @@ def shingle_table(
     return ex.distinct()
 
 
+def _freq_capped(sh: DataFrame, max_shingle_freq: int | None) -> DataFrame:
+    """[id, sh] without the shingles found in more than
+    ``max_shingle_freq`` documents (``None`` keeps them all).
+
+    Window count, NOT groupBy+join-back: the join form recomputes the
+    whole shingling DAG for the frequency branch and pays a second
+    shuffle (measured 2.7x on q23 at sf0.1). The window shuffles sh
+    once on the shingle hash — the same partitioning the caller's
+    self-join needs, so the exchange is reused."""
+    if max_shingle_freq is None:
+        return sh
+    return (
+        sh.withColumn("f", F.count(F.lit(1)).over(Window.partitionBy("sh")))
+        .filter(F.col("f") <= max_shingle_freq)
+        .select("id", "sh")
+    )
+
+
+def _sizes(sh: DataFrame, id_name: str, n_name: str) -> DataFrame:
+    """[id_name, n_name]: the distinct shingles per document of ``sh``."""
+    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
+    return sizes.select(F.col("id").alias(id_name), F.col("n_sh").alias(n_name))
+
+
+def jaccard_of(
+    inter: DataFrame, sh_a: DataFrame, sh_b: DataFrame, min_jaccard: float
+) -> DataFrame:
+    """[id_a, id_b, inter, n_a, n_b, jaccard] for the pairs of ``inter``
+    [id_a, id_b, inter] with jaccard ≥ ``min_jaccard``; n_a counts id_a's
+    rows in ``sh_a`` and n_b id_b's in ``sh_b`` (both [id, sh]). jaccard
+    is one int/int division on both engines → comparison-safe."""
+    return (
+        inter.join(_sizes(sh_a, "id_a", "n_a"), "id_a")
+        .join(_sizes(sh_b, "id_b", "n_b"), "id_b")
+        .withColumn("jaccard", F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")))
+        .filter(F.col("jaccard") >= min_jaccard)
+        .select("id_a", "id_b", "inter", "n_a", "n_b", "jaccard")
+    )
+
+
+def verify_jaccard(
+    cands: DataFrame, sh_a: DataFrame, sh_b: DataFrame, min_jaccard: float
+) -> DataFrame:
+    """Exact Jaccard of the candidate pairs ``cands`` [id_a, id_b], with
+    id_a's shingles from ``sh_a`` and id_b's from ``sh_b`` (they differ
+    when q282 verifies a batch against history); output as
+    :func:`jaccard_of`. Verifies ONLY the candidates — the point of the
+    filter in front (LSH bands, prefix filter, signature store): the
+    join's size is Σ_candidates |shingles(a)|, linear in candidates,
+    not quadratic in the corpus like an all-pairs exact Jaccard."""
+    inter = (
+        cands.join(sh_a.select(F.col("id").alias("id_a"), "sh"), "id_a")
+        .join(sh_b.select(F.col("id").alias("id_b"), "sh"), ["id_b", "sh"])
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+    return jaccard_of(inter, sh_a, sh_b, min_jaccard)
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -130,27 +193,13 @@ def ngram_jaccard_pairs(
 
     Scale levers: ``max_shingle_freq`` drops stop-shingles (a shingle
     in f docs contributes f² join rows — the classic skew bomb);
-    min_jaccard prunes output. Both engines compute jaccard as the
-    same int/int division → raw doubles are comparison-safe.
+    min_jaccard prunes output (:func:`jaccard_of`).
     """
     # join/shuffle on an 8-byte shingle hash, not the string — the
     # self-join is the hot path and string keys double its cost.
     # (Counts are identical barring a 64-bit collision within one
     # dataset — odds ~|shingles|²/2⁶⁴.)
-    sh = shingle_table(df, id_col, text_col, n, hashed=True)
-    if max_shingle_freq is not None:
-        # window count, NOT groupBy+join-back: the join form recomputes
-        # the whole shingling DAG for the frequency branch and pays a
-        # second shuffle (measured 2.7x on q23 at sf0.1). The window
-        # shuffles sh once on the shingle hash — the same partitioning
-        # the self-join below needs, so the exchange is reused.
-        w = Window.partitionBy("sh")
-        sh = (
-            sh.withColumn("f", F.count(F.lit(1)).over(w))
-            .filter(F.col("f") <= max_shingle_freq)
-            .select("id", "sh")
-        )
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
+    sh = _freq_capped(shingle_table(df, id_col, text_col, n, hashed=True), max_shingle_freq)
     a = sh.alias("a")
     b = sh.alias("b")
     inter = (
@@ -158,13 +207,7 @@ def ngram_jaccard_pairs(
         .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    return (
-        inter.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
-        .withColumn("jaccard", F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")))
-        .filter(F.col("jaccard") >= min_jaccard)
-        .select("id_a", "id_b", "inter", "n_a", "n_b", "jaccard")
-    )
+    return jaccard_of(inter, sh, sh, min_jaccard)
 
 
 def shingle_containment_pairs(
@@ -180,20 +223,12 @@ def shingle_containment_pairs(
     short doc fully contained in a long one scores 1.0 on containment
     but low on Jaccard, so q23-style symmetric dedup misses it).
 
-    Output: [id_a, id_b, inter, n_a, containment] for id_a ≠ b, both
+    Output: [id_a, id_b, inter, n_a, containment] for id_a ≠ id_b, both
     orientations. Same scale levers as ngram_jaccard_pairs: hashed
     8-byte shingle join keys, frequency cap against hot-shingle f²
     blowup; containment is an int/int division → comparison-safe.
     """
-    sh = shingle_table(df, id_col, text_col, n, hashed=True)
-    if max_shingle_freq is not None:
-        w = Window.partitionBy("sh")
-        sh = (
-            sh.withColumn("f", F.count(F.lit(1)).over(w))
-            .filter(F.col("f") <= max_shingle_freq)
-            .select("id", "sh")
-        )
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
+    sh = _freq_capped(shingle_table(df, id_col, text_col, n, hashed=True), max_shingle_freq)
     a = sh.alias("a")
     b = sh.alias("b")
     inter = (
@@ -202,10 +237,7 @@ def shingle_containment_pairs(
         .agg(F.count(F.lit(1)).alias("inter"))
     )
     return (
-        inter.join(
-            sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_sh", "n_a"),
-            "id_a",
-        )
+        inter.join(_sizes(sh, "id_a", "n_a"), "id_a")
         .withColumn("containment", F.col("inter") / F.col("n_a"))
         .filter(F.col("containment") >= min_containment)
         .select("id_a", "id_b", "inter", "n_a", "containment")
@@ -235,8 +267,8 @@ def prefix_jaccard_pairs(
 
     Plan shape: one window pass for global shingle frequency (order =
     rarity), one per-doc rank window, prefix self-join, then exact
-    verification that touches only candidate pairs (pair ⋈ shingles
-    of both sides). Shuffles carry 8-byte hashes throughout.
+    verification of the candidate pairs only (:func:`verify_jaccard`).
+    Shuffles carry 8-byte hashes throughout.
 
     Measured regime (local[32], word-4-grams, t=0.6): on the synthetic
     corpora (sf0.1 and its 16× scale-up) the full hashed-shingle join
@@ -273,21 +305,7 @@ def prefix_jaccard_pairs(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    # exact verification over candidates only
-    inter = (
-        cand.join(sh.select(F.col("id").alias("id_a"), "sh"), "id_a")
-        .join(sh.select(F.col("id").alias("id_b"), "sh"), ["id_b", "sh"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    return (
-        inter.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
-        .withColumn("jaccard", F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")))
-        .filter(F.col("jaccard") >= t)
-        .select("id_a", "id_b", "inter", "n_a", "n_b", "jaccard")
-    )
+    return verify_jaccard(cand, sh, sh, t)
 
 
 # ---------------------------------------------------------------------------
@@ -308,12 +326,6 @@ def md5_hash60(col: Column | str, seed: int | None = None) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     keyed = c if seed is None else F.concat(c, F.lit(f":{seed}"))
     return F.conv(F.substring(F.md5(keyed), 1, 15), 16, 10).cast("long")
-
-
-def sql_md5_hash60(expr: str, seed: int | None = None) -> str:
-    """DuckDB twin of :func:`md5_hash60` (same value, bit for bit)."""
-    keyed = expr if seed is None else f"({expr} || ':{seed}')"
-    return f"(('0x' || substr(md5({keyed}), 1, 15))::BIGINT)"
 
 
 def minhash_signatures(
@@ -423,8 +435,7 @@ def minhash_neardup_pairs(
     bands: int = 4,
     min_jaccard: float = 0.5,
 ) -> DataFrame:
-    """LSH candidates verified by exact Jaccard (candidate pairs only
-    — the verification join touches candidates, not all pairs).
+    """LSH candidates verified by exact Jaccard (:func:`verify_jaccard`).
     Output: [id_a, id_b, jaccard].
 
     The signature branch and the verification branch DELIBERATELY
@@ -446,27 +457,8 @@ def minhash_neardup_pairs(
     cands = minhash_lsh_candidates(
         minhash_signatures(df, id_col, text_col, n, num_hashes), num_hashes, bands
     ).select("id_a", "id_b")
-    # Verify ONLY candidate pairs (the whole point of LSH): the
-    # intersection count comes from a candidates×shingles join whose
-    # size is Σ_candidates |shingles(a)| — linear in candidates, not
-    # quadratic in the corpus like an all-pairs exact Jaccard.
     sh = shingle_table(df, id_col, text_col, n, hashed=True)
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    sa = sh.select(F.col("id").alias("id_a"), "sh")
-    sb = sh.select(F.col("id").alias("id_b"), "sh")
-    inter = (
-        cands.join(sa, "id_a")
-        .join(sb, ["id_b", "sh"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    return (
-        inter.join(sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a")), "id_a")
-        .join(sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b")), "id_b")
-        .withColumn("jaccard", F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")))
-        .filter(F.col("jaccard") >= min_jaccard)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return verify_jaccard(cands, sh, sh, min_jaccard).select("id_a", "id_b", "jaccard")
 
 
 # ---------------------------------------------------------------------------
@@ -887,8 +879,6 @@ def tf_cosine_pairs(
     a COUNT window over the term — the same frame the join consumes,
     so the exchange is reused (never a groupBy+join-back).
     """
-    from ai_data_pipeline_spark.functions.text import word_ngrams
-
     grams = docs.select(
         F.col(id_col).alias("id"),
         F.explode(word_ngrams(F.lower(F.col(text_col)), n)).alias("term"),

@@ -50,21 +50,22 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # never touching the store). The batch (src0) computes its own
 # signatures, band-joins against the store's band digests
 # (minhash_banded — definitionally the same expression that built
-# the store), and candidates are verified at EXACT Jaccard ≥ 0.6;
-# history shingles are recomputed ONLY for candidate history docs (a
-# semi-join-bounded text fetch — at 100 TB a point-lookup read, not
-# a history scan). Within-batch near-dups: the banded self-join +
-# exact verify + star-contraction components + min-id keeper (q204's
-# policy, batch-local). Admission per lang (q108's triple):
-# dropped-vs-history takes precedence; a surviving doc is admitted
-# iff it is its within-batch cluster minimum (clusters computed over
-# ALL batch docs, so a keeper that itself matched history does not
-# resurrect its near-dups — their content lives in history
-# transitively). Scale: the store read carries (id, 32×int64) — 256
-# bytes/doc instead of text; the banded join shuffles on
-# (band, digest) with candidate mass bounded by banding; exact
-# verification is linear in candidates; components run on batch
-# pairs only. 16× probe with history ≫ batch in SCALING.md.
+# the store), and candidates are verified at EXACT Jaccard ≥ 0.6 by
+# dedup.verify_jaccard (batch shingles on one side, history shingles
+# on the other); history shingles are recomputed ONLY for candidate
+# history docs (a semi-join-bounded text fetch — at 100 TB a
+# point-lookup read, not a history scan). Within-batch near-dups: the
+# banded self-join + the same verifier + star-contraction components +
+# min-id keeper (q204's policy, batch-local). Admission per lang
+# (q108's triple): dropped-vs-history takes precedence; a surviving
+# doc is admitted iff it is its within-batch cluster minimum (clusters
+# computed over ALL batch docs, so a keeper that itself matched
+# history does not resurrect its near-dups — their content lives in
+# history transitively). Scale: the store read carries (id, 32×int64)
+# — 256 bytes/doc instead of text; the banded join shuffles on (band,
+# digest) with candidate mass bounded by banding; exact verification
+# is linear in candidates; components run on batch pairs only. 16×
+# probe with history ≫ batch in SCALING.md.
 # Collision note (r11 ADVICE): exact-Jaccard verification intersects
 # xxhash64-hashed shingles (shingle_table hashed=True) while the
 # oracle intersects raw shingle strings — the same assumption the
@@ -138,33 +139,20 @@ def _store_admission(hist_docs, batch_docs, store=None, store_fn=None):
     # the banded store join (the q84 iterative-reuse lesson)
     cand_h = (
         banded_batch.join(banded_hist, ["band", "band_digest"])
-        .select(F.col("id").alias("bid"), "hid")
+        .select(F.col("id").alias("id_a"), F.col("hid").alias("id_b"))
         .distinct()
         .localCheckpoint()
     )
     cand_hist_docs = hist_docs.join(
-        cand_h.select(F.col("hid").alias("doc_id")).distinct(), "doc_id", "semi"
+        cand_h.select(F.col("id_b").alias("doc_id")).distinct(), "doc_id", "semi"
     )
     # two consumers (sizes + the intersection join) — materialize
     sh_hist = dedup.shingle_table(
         cand_hist_docs, "doc_id", "text", 3, hashed=True
     ).localCheckpoint()
-    nb = sh_batch.groupBy("id").agg(F.count(F.lit(1)).alias("n_b"))
-    nh = sh_hist.groupBy("id").agg(F.count(F.lit(1)).alias("n_h"))
-    inter_h = (
-        cand_h.join(sh_batch.select(F.col("id").alias("bid"), "sh"), "bid")
-        .join(sh_hist.select(F.col("id").alias("hid"), "sh"), ["hid", "sh"])
-        .groupBy("bid", "hid")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
     hist_dup = (
-        inter_h.join(nb.select(F.col("id").alias("bid"), "n_b"), "bid")
-        .join(nh.select(F.col("id").alias("hid"), "n_h"), "hid")
-        .filter(
-            F.col("inter") / (F.col("n_b") + F.col("n_h") - F.col("inter"))
-            >= F.lit(_Q282_TAU)
-        )
-        .select("bid")
+        dedup.verify_jaccard(cand_h, sh_batch, sh_hist, _Q282_TAU)
+        .select(F.col("id_a").alias("doc_id"))
         .distinct()
         .withColumn("in_hist", F.lit(1))
     )
@@ -177,20 +165,8 @@ def _store_admission(hist_docs, batch_docs, store=None, store_fn=None):
     cand_bb = dedup.minhash_lsh_candidates(
         sigs_batch, _Q282_HASHES, _Q282_BANDS
     ).select("id_a", "id_b")
-    inter_bb = (
-        cand_bb.join(sh_batch.select(F.col("id").alias("id_a"), "sh"), "id_a")
-        .join(sh_batch.select(F.col("id").alias("id_b"), "sh"), ["id_b", "sh"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    pairs_bb = (
-        inter_bb.join(nb.select(F.col("id").alias("id_a"), F.col("n_b").alias("n_a")), "id_a")
-        .join(nb.select(F.col("id").alias("id_b"), F.col("n_b").alias("n_bb")), "id_b")
-        .filter(
-            F.col("inter") / (F.col("n_a") + F.col("n_bb") - F.col("inter"))
-            >= F.lit(_Q282_TAU)
-        )
-        .select("id_a", "id_b")
+    pairs_bb = dedup.verify_jaccard(cand_bb, sh_batch, sh_batch, _Q282_TAU).select(
+        "id_a", "id_b"
     )
     clusters = dedup.dedup_clusters_star(pairs_bb)
 
@@ -198,7 +174,7 @@ def _store_admission(hist_docs, batch_docs, store=None, store_fn=None):
         batch_docs.select("doc_id", "lang")
         .join(clusters.withColumnRenamed("id", "doc_id"), "doc_id", "left")
         .withColumn("cluster_id", F.coalesce(F.col("cluster_id"), F.col("doc_id")))
-        .join(hist_dup.withColumnRenamed("bid", "doc_id"), "doc_id", "left")
+        .join(hist_dup, "doc_id", "left")
     )
     return keyed, sigs_batch
 

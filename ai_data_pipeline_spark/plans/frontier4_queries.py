@@ -274,7 +274,6 @@ from ai_data_pipeline_spark.plans.frontier3_queries import (  # noqa: E402
     _Q290_ANDS,
     _Q290_PHRASES,
     _Q296_QUERIES,
-    _Q296_TOPK,
 )
 
 

@@ -424,7 +424,6 @@ def q318_incremental_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFra
         sh_hist = sh_base.filter(
             ~F.col("is_b") & (F.col("f_hist") <= _Q318_MAXF)
         ).select("id", "sh")
-        sizes_h = sh_hist.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
         ah = sh_hist.alias("a")
         bh = sh_hist.alias("b")
         inter_h = (
@@ -435,21 +434,8 @@ def q318_incremental_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFra
             .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
             .agg(F.count(F.lit(1)).alias("inter"))
         )
-        hist_pairs = (
-            inter_h.join(
-                sizes_h.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a")),
-                "id_a",
-            )
-            .join(
-                sizes_h.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b")),
-                "id_b",
-            )
-            .withColumn(
-                "jaccard",
-                F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")),
-            )
-            .filter(F.col("jaccard") >= _Q318_TAU_F)
-            .select("id_a", "id_b")
+        hist_pairs = dedup.jaccard_of(inter_h, sh_hist, sh_hist, _Q318_TAU_F).select(
+            "id_a", "id_b"
         )
 
         def build_store():
@@ -463,7 +449,6 @@ def q318_incremental_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFra
         sh_full = sh_base.filter(F.col("f_full") <= _Q318_MAXF).select(
             "id", "is_b", "sh"
         )
-        sizes = sh_full.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
         a = sh_full.alias("a")
         b = sh_full.alias("b")
         inter = (
@@ -481,22 +466,7 @@ def q318_incremental_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFra
             # consumed by touched-discovery AND re-contraction — and
             # the shingle self-join above is expensive
             return (
-                inter.join(
-                    sizes.select(
-                        F.col("id").alias("id_a"), F.col("n_sh").alias("n_a")
-                    ),
-                    "id_a",
-                )
-                .join(
-                    sizes.select(
-                        F.col("id").alias("id_b"), F.col("n_sh").alias("n_b")
-                    ),
-                    "id_b",
-                )
-                .filter(
-                    F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
-                    >= F.lit(_Q318_TAU_F)
-                )
+                dedup.jaccard_of(inter, sh_full, sh_full, _Q318_TAU_F)
                 .select("id_a", "id_b")
                 .localCheckpoint()
             )

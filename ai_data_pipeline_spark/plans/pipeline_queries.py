@@ -2554,7 +2554,6 @@ _Q152_SEP_REC = "\x1e"
 
 
 def q152_e2e_pdf_qa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ai_data_pipeline_spark.operators.chunker import chunk_paged_documents
     from ai_data_pipeline_spark.operators.json_fallback import validate_qa
     from ai_data_pipeline_spark.operators.llm_map import StubLLM, llm_map
     from ai_data_pipeline_spark.sources.fixtures import materialize_pdf_corpus
@@ -2943,7 +2942,7 @@ _SQL_4GRAMS = sql_word_ngrams("text", 4)
 _SQL_3GRAMS = sql_word_ngrams("text", 3)
 
 # q24/q25 twins: DuckDB recomputes the md5_hash60 family bit-for-bit
-# (see operators/dedup.py:md5_hash60 / sql_md5_hash60).
+# (see operators/dedup.py:md5_hash60).
 _SQL_H60_SEEDED = "(('0x' || substr(md5(shingle || ':' || j), 1, 15))::BIGINT)"
 _SQL_H60_TOK = "(('0x' || substr(md5(tok), 1, 15))::BIGINT)"
 _Q25_BIT_SUMS = ", ".join(

@@ -2,12 +2,14 @@ from __future__ import annotations
 
 import math
 import os
+import re
 import sys
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from ai_data_pipeline_spark.functions.text import WS_RUN
 from ai_data_pipeline_spark.session import get_spark
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -91,4 +93,34 @@ def ivf_assign_twin(corpus: list[tuple], centroids: list[list[float]]) -> dict:
         dists = [_sqdist(v, c) for c in centroids]
         cell = min(range(len(dists)), key=lambda c: (dists[c], c))
         out[vid] = (cell, dists[cell])
+    return out
+
+
+def shingle_jaccard_twin(
+    docs: list[tuple], n: int, max_shingle_freq: int | None = None
+) -> dict:
+    """Exact Jaccard over distinct word n-gram sets: {(id_a, id_b):
+    (inter, n_a, n_b, jaccard)} for every pair with id_a < id_b that
+    shares a shingle. ``docs`` is [(doc_id, text)]; tokens split on
+    WS_RUN with empties dropped, an n-gram is its tokens joined with one
+    space, and a shingle found in more than ``max_shingle_freq`` docs is
+    dropped from every set. Plain string sets, no hashing;
+    jaccard = inter / (n_a + n_b - inter)."""
+    sets = {}
+    for did, text in docs:
+        toks = [t for t in re.split(WS_RUN, text) if t]
+        sets[did] = {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+    if max_shingle_freq is not None:
+        freq = {}
+        for grams in sets.values():
+            for g in grams:
+                freq[g] = freq.get(g, 0) + 1
+        sets = {d: {g for g in grams if freq[g] <= max_shingle_freq} for d, grams in sets.items()}
+    ids, out = sorted(sets), {}
+    for a in ids:
+        for b in ids:
+            inter = len(sets[a] & sets[b]) if a < b else 0
+            if inter:
+                na, nb = len(sets[a]), len(sets[b])
+                out[(a, b)] = (inter, na, nb, inter / (na + nb - inter))
     return out

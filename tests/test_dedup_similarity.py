@@ -15,7 +15,12 @@ from ai_data_pipeline_spark.operators.vectorized import (
     ivf_search_cosine_np,
     knn_l2_np,
 )
-from tests.conftest import cosine_topk_twin, ivf_assign_twin, knn_l2_twin
+from tests.conftest import (
+    cosine_topk_twin,
+    ivf_assign_twin,
+    knn_l2_twin,
+    shingle_jaccard_twin,
+)
 
 
 def _docs(spark):
@@ -43,6 +48,10 @@ def test_exact_dup_stats_norm_dups(spark):
     assert row.n_norm_dups == 2  # 2 ≡ 1 and 5 ≡ 1 after normalization
 
 
+def _jaccard_rows(df):
+    return {(r.id_a, r.id_b): (r.inter, r.n_a, r.n_b, r.jaccard) for r in df.collect()}
+
+
 def test_ngram_jaccard_identical_pair(spark):
     pairs = {
         (r.id_a, r.id_b): r.jaccard
@@ -63,12 +72,16 @@ def test_ngram_jaccard_shingle_freq_cap_bounds_pairs(spark):
     rows += [(100, "rare alpha beta gamma delta"), (101, "rare alpha beta gamma echo")]
     docs = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
 
-    uncapped = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", n=2)
-    capped = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", n=2, max_shingle_freq=5)
+    uncapped = _jaccard_rows(dedup.ngram_jaccard_pairs(docs, "doc_id", "text", n=2))
+    capped = _jaccard_rows(
+        dedup.ngram_jaccard_pairs(docs, "doc_id", "text", n=2, max_shingle_freq=5)
+    )
+    assert uncapped == shingle_jaccard_twin(rows, 2)
+    assert capped == shingle_jaccard_twin(rows, 2, max_shingle_freq=5)
 
     # uncapped: the hot shingles link all 20 boilerplate docs pairwise
-    assert uncapped.count() >= 20 * 19 // 2
-    got = {(r.id_a, r.id_b) for r in capped.collect()}
+    assert len(uncapped) >= 20 * 19 // 2
+    got = set(capped)
     # capped: the 190 boilerplate-only pairs vanish...
     assert not any(a < 20 and b < 20 for a, b in got)
     # ...but the true near-dup pair (rare shingles, f=2 <= cap) survives
@@ -85,10 +98,23 @@ def test_minhash_identical_signatures(spark):
 
 
 def test_minhash_lsh_finds_exact_dup(spark):
+    """Every emitted jaccard equals the plain-Python twin's, and every
+    LSH candidate the twin puts at ≥ τ is emitted."""
+    docs = _docs(spark)
     out = dedup.minhash_neardup_pairs(
-        _docs(spark), "doc_id", "text", n=2, num_hashes=16, bands=4, min_jaccard=0.9
+        docs, "doc_id", "text", n=2, num_hashes=16, bands=4, min_jaccard=0.9
     ).collect()
-    assert {(r.id_a, r.id_b) for r in out} >= {(1, 2)}
+    got = {(r.id_a, r.id_b): r.jaccard for r in out}
+    assert set(got) >= {(1, 2)}
+    twin = shingle_jaccard_twin([(r.doc_id, r.text) for r in docs.collect()], 2)
+    assert got == {k: twin[k][3] for k in got}
+    cands = {
+        (r.id_a, r.id_b)
+        for r in dedup.minhash_lsh_candidates(
+            dedup.minhash_signatures(docs, "doc_id", "text", n=2, num_hashes=16), 16, 4
+        ).collect()
+    }
+    assert set(got) == {k for k in cands if k in twin and twin[k][3] >= 0.9}
 
 
 def test_simhash_identical_and_near(spark):
@@ -269,9 +295,15 @@ def test_shingle_containment_asymmetry(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
     got = {
-        (r.id_a, r.id_b): r.containment
+        (r.id_a, r.id_b): (r.inter, r.n_a, r.containment)
         for r in dedup.shingle_containment_pairs(docs, "doc_id", "text", n=2).collect()
     }
+    want = {}
+    for (a, b), (inter, na, nb, _) in shingle_jaccard_twin(rows, 2).items():
+        want[(a, b)] = (inter, na, inter / na)
+        want[(b, a)] = (inter, nb, inter / nb)
+    assert got == want
+    got = {k: v[2] for k, v in got.items()}
     assert got[(1, 2)] == 1.0      # every bigram of 1 appears in 2
     assert 0.0 < got[(2, 1)] < 1.0  # 2 has bigrams 1 lacks
     assert (1, 3) not in got
@@ -292,20 +324,37 @@ def test_prefix_jaccard_equals_full_join(spark):
         (6, "shared boiler plate " + "unique6 " * 6),  # hot shingle, low jaccard
     ]
     docs = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
+    twin = shingle_jaccard_twin(rows, 2)
     for t in (0.5, 0.8):
-        full = {
-            (r.id_a, r.id_b): (r.inter, r.n_a, r.n_b, r.jaccard)
-            for r in dedup.ngram_jaccard_pairs(
-                docs, "doc_id", "text", n=2, min_jaccard=t
-            ).collect()
-        }
-        pref = {
-            (r.id_a, r.id_b): (r.inter, r.n_a, r.n_b, r.jaccard)
-            for r in dedup.prefix_jaccard_pairs(
-                docs, "doc_id", "text", n=2, min_jaccard=t
-            ).collect()
-        }
-        assert pref == full, f"t={t}: {pref} != {full}"
+        want = {k: v for k, v in twin.items() if v[3] >= t}
+        full = _jaccard_rows(
+            dedup.ngram_jaccard_pairs(docs, "doc_id", "text", n=2, min_jaccard=t)
+        )
+        pref = _jaccard_rows(
+            dedup.prefix_jaccard_pairs(docs, "doc_id", "text", n=2, min_jaccard=t)
+        )
+        assert full == want, f"t={t}: {full} != {want}"
+        assert pref == want, f"t={t}: {pref} != {want}"
+
+
+def test_verify_jaccard_two_tables_at_threshold(spark):
+    """Batch-vs-history verification: id_a's shingles come from one
+    table and id_b's from another, and a pair whose Jaccard equals τ
+    exactly is kept (>=), as the twin says."""
+    batch = [(1, "a b c"), (2, "x y z")]
+    hist = [(11, "a b d"), (12, "x p q r s")]
+
+    def sh(rows):
+        df = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
+        return dedup.shingle_table(df, "doc_id", "text", 1, hashed=True)
+
+    cands = spark.createDataFrame(
+        [(a, b) for a, _ in batch for b, _ in hist], "id_a BIGINT, id_b BIGINT"
+    )
+    got = _jaccard_rows(dedup.verify_jaccard(cands, sh(batch), sh(hist), 0.5))
+    twin = shingle_jaccard_twin(batch + hist, 1)
+    assert twin[(1, 11)] == (2, 3, 3, 0.5) and twin[(2, 12)][3] < 0.5
+    assert got == {k: v for k, v in twin.items() if v[3] >= 0.5}
 
 
 def test_dedup_clusters_star_matches_union_find(spark):
