@@ -80,8 +80,18 @@ def test_rewritten_archive_is_reread(zip_on_path):
     assert importlib.import_module("pyworker_zip_b").VALUE == 2
 
 
-def test_reused_workers_do_not_reread_pyspark_zip(spark):
+def test_reused_workers_do_not_reread_pyspark_zip(spark, monkeypatch):
     from pyspark.sql import functions as F
+
+    # Spark keeps one FIFO pool of idle workers per worker environment.
+    # Earlier jobs in the session can leave more idle workers in the
+    # shared pool than one job takes, and then the second run below is
+    # handed none of the first run's workers. A UDF-level environment
+    # variable gives this test a pool of its own, so the second run
+    # reuses exactly the workers the first one released.
+    monkeypatch.setitem(
+        spark.sparkContext.environment, "PYWORKER_TEST_POOL", "reuse-probe"
+    )
 
     @F.pandas_udf("pid long, rereads long, patched boolean")
     def probe(ids: pd.Series) -> pd.DataFrame:
